@@ -4,7 +4,8 @@ Spark analogue of the reference's config surface: the 9 env vars resolved in
 ``NeoToCosmos/Neo4j.cs:32-48`` + ``NeoToCosmos/CosmosDb.cs:60-99`` and the 5
 CLI flags in ``NeoToCosmos/CommandLineOptions.cs:8-26`` (``-r`` restart,
 ``-t``/``-i`` sharding, ``-p`` page size, ``-l`` log level).  Sharding and
-page size dissolve into Spark parallelism knobs; restart and paths survive.
+page size dissolve into Spark parallelism knobs; paths survive here, and
+restart as ``run_pipeline``'s ``restart`` argument (``--restart``).
 """
 
 from __future__ import annotations
@@ -32,9 +33,6 @@ class PipelineConfig:
     partition_key: str = field(
         default_factory=lambda: os.environ.get("KG_PARTITION_KEY", "repo")
     )
-    # reference: `-r` restart flag (CommandLineOptions.cs:8-10) — truncate
-    # sink + lineage before running.
-    restart: bool = False
     # parallelism knobs (replace the reference's -t/-i static range sharding,
     # Migrator.cs:50-62 — Spark's scheduler owns task splitting).
     shuffle_partitions: int = field(
@@ -44,14 +42,11 @@ class PipelineConfig:
     # the resume granularity (analogue of the reference's page checkpoint,
     # Migrator.cs:80-81). Must be stable across runs for resume to work.
     lineage_buckets: int = 64
-    # salt width used to split hot repos before wide transforms
-    skew_salt: int = 16
     # MinHash-LSH parameters (link stage)
     minhash_perms: int = 64
     lsh_bands: int = 16  # 16 bands x 4 rows
     shingle_size: int = 3
     jaccard_threshold: float = 0.5
-    embedding_dim: int = 32
     embedding_threshold: float = 0.85
     # extract execution path: "arrow" (pandas/Arrow UDF — the contract
     # surface, required for tree-sitter-style extractors) or "jvm" (the
@@ -59,10 +54,6 @@ class PipelineConfig:
     extract_engine: str = field(
         default_factory=lambda: os.environ.get("KG_EXTRACT_ENGINE", "arrow")
     )
-
-    @property
-    def lsh_rows_per_band(self) -> int:
-        return self.minhash_perms // self.lsh_bands
 
     def __post_init__(self) -> None:
         if self.extract_engine not in ("arrow", "jvm"):

@@ -1,36 +1,46 @@
 """Pipeline orchestration: extract → link → canonicalize → materialize.
 
 The reference's lifecycle (``Migrator.MigrateAsync``: counts → bounds →
-sink DDL → vertices → edges, ``Migrator.cs:31-48``) becomes four Spark
-stages, each independently resumable through the lineage table.
+sink DDL → vertices → edges, ``Migrator.cs:31-48``) becomes Spark stages
+(after an optional clean stage), each resumable through the lineage table
+in one of two shapes:
 
-Resume granularity:
-  * extract — bucket-level (corpus-sized; buckets are
-    ``pmod(xxhash64(repo, path), B)`` so a rerun re-processes only missing
-    buckets, mirroring the reference's page high-water-mark);
-  * materialize — bucket-level per element kind (the other corpus-sized
-    stage: lineage rows per pk_bucket for nodes AND edges, the analogue of
-    the reference's per-page checkpoints for both kinds, Migrator.cs:80-81,
-    129-130; a crash mid-materialize rewrites only missing buckets);
-  * link / canonicalize — stage-level (inputs are vocabulary- or
-    output-sized; a rerun overwrites atomically).  Any run
-    in which extract produced new output also invalidates downstream
-    stages (their inputs changed), so a changed-input rerun converges to
-    the same state as a clean run — the Spark mapping of the reference's
-    ``enableUpsert: true`` semantics for *modified* documents
-    (``CosmosDb.cs:144``).
+  * bucketed (``_bucketed_stage``: clean_exact, extract) — the
+    corpus-sized stages.  Work buckets are ``pmod(xxhash64(keys), B)``
+    and a rerun processes only the buckets not recorded done, mirroring
+    the reference's page high-water-mark (``Migrator.cs:80-81``).
+    Lineage is recorded from the source side, so a bucket whose files
+    yield no output still completes; output row counts come from
+    parquet footers.  materialize is bucketed too, per element kind
+    (nodes AND edges, the reference's per-page checkpoints for both
+    kinds, ``Migrator.cs:80-81,129-130``), with its two writes run
+    concurrently.
+  * atomic (``_atomic_stage``: clean_minhash, link, canonicalize) —
+    inputs are vocabulary- or output-sized, or (near-dup pairs) cross
+    buckets by construction.  The stage is skipped only when it is
+    recorded done and its outputs exist; otherwise its whole output is
+    rebuilt and overwritten.
 
-Changed-input detection (``detect_changes=True``): extract lineage records
-an order-insensitive per-bucket fingerprint of the input rows; a rerun
-compares current fingerprints against recorded ones and re-extracts only
-buckets whose input changed.  Off by default because it costs one full
-JVM-side hash scan of the source content — and the fingerprint is also
-only RECORDED when on, so the default path's lineage agg stays a narrow
-(repo, path) scan that parquet column pruning answers without touching
-content bytes (records without a fingerprint are conservatively treated
-as changed by a later detect_changes run).  At real scale you would
-fingerprint commit metadata instead of content bytes.  Deleted files are
-out of scope (the reference's upsert cannot delete either).
+Both shapes share one crash order: the stage's data is durable → the
+lineage of every stage downstream of it is dropped → the stage records
+itself done.  A crash between two steps leaves either the stage
+unrecorded (the rerun rewrites the same bytes) or its downstream
+unrecorded (downstream reruns), never a stage done over stale downstream
+output.  So a changed-input rerun converges to the state of a clean run —
+the Spark mapping of the reference's ``enableUpsert: true`` semantics for
+*modified* documents (``CosmosDb.cs:144``).
+
+Changed-input detection (``detect_changes=True``): a stage records an
+order-insensitive fingerprint of its input rows (per bucket, or per stage
+for clean_minhash); a rerun compares current fingerprints against recorded
+ones and redoes only what changed.  Off by default because it costs one
+full JVM-side hash scan of the source content — and the fingerprint is
+also only RECORDED when on, so the default path's lineage agg stays a
+narrow (repo, path) scan that parquet column pruning answers without
+touching content bytes (records without a fingerprint are conservatively
+treated as changed by a later detect_changes run).  At real scale you
+would fingerprint commit metadata instead of content bytes.  Deleted
+files are out of scope (the reference's upsert cannot delete either).
 
 Skew: the hot-repo problem (one repo = ~30% of rows) is defeated *before*
 the first wide transform by keying work buckets on (repo, path) — path
@@ -40,9 +50,13 @@ SURVEY.md §4 watch list.
 
 from __future__ import annotations
 
+import glob
 import os
 import shutil
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow.parquet as pq
 from pyspark.sql import (
     Column,
     DataFrame,
@@ -60,11 +74,22 @@ from kg.log import log_event
 from kg.materialize import run_materialize
 
 STAGES = ("clean", "extract", "link", "canonicalize", "materialize")
-# stages whose lineage a new upstream output invalidates (crash-ordered:
-# dropped durably BEFORE the producing stage records itself done)
-_DOWNSTREAM_OF_EXTRACT = (
-    "link", "canonicalize", "materialize_nodes", "materialize_edges"
+# every table a stage writes (--restart truncates them all)
+_TABLES = (
+    "clean", "triples", "mentions", "matches", "entity_map", "nodes", "edges"
 )
+# lineage stages in dependency order
+_LINEAGE_ORDER = (
+    "extract", "link", "canonicalize", "materialize_nodes", "materialize_edges"
+)
+
+
+def _downstream(stage: str) -> tuple[str, ...]:
+    """Lineage stages whose input ``stage`` writes (clean feeds them all)."""
+    if stage not in _LINEAGE_ORDER:
+        return _LINEAGE_ORDER
+    return _LINEAGE_ORDER[_LINEAGE_ORDER.index(stage) + 1:]
+
 
 def _fingerprint(*cols: str) -> Column:
     """Order-insensitive content fingerprint: ``count:bit_xor(xxhash64)``.
@@ -80,66 +105,34 @@ def _fingerprint(*cols: str) -> Column:
     )
 
 
-def _bucket_footer_counts(path: str, col: str, buckets: set[int]) -> dict[int, int]:
-    """Per-bucket output row counts from parquet FOOTERS — O(buckets)
-    metadata reads, no Spark job.  Absent dirs count 0 (a bucket whose
-    recomputation yielded nothing).  Local paths only (PipelineConfig
-    rejects remote warehouses); a remote sink would read manifest counts
-    through its own metadata API."""
-    assert "://" not in path, "remote warehouses are rejected by PipelineConfig"
-    import glob as _glob
+def _footer_stats(path: str, col: str, rows: list[dict]) -> list[dict]:
+    """Lineage rows for just-written buckets: each of ``rows`` (bucket,
+    rows_in[, input_fp]) gains ``rows_out``, read from the parquet
+    FOOTERS of its bucket dir.
 
-    import pyarrow.parquet as _pq
-
-    return {
-        b: sum(
-            _pq.ParquetFile(f).metadata.num_rows
-            for f in _glob.glob(os.path.join(path, f"{col}={b}", "*.parquet"))
+    O(buckets) metadata reads and no Spark job: ``_write`` lands each
+    bucket in one task, so a bucket dir holds one file whatever the data
+    size (an Iceberg sink would read manifest counts the same way).  An
+    absent dir counts 0 — a bucket whose recomputation yields nothing is
+    still recorded done, or it would be redone forever.  No output
+    fingerprint: the output is a deterministic recomputation of the
+    input, and invalidation rides on the input fingerprint alone.  Local
+    paths only (``PipelineConfig`` rejects ``scheme://`` warehouses)."""
+    for r in rows:
+        bucket_dir = os.path.join(path, f"{col}={r['bucket']}")
+        r["rows_out"] = sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for f in glob.glob(os.path.join(bucket_dir, "*.parquet"))
         )
-        for b in buckets
-    }
+    return rows
 
 
-def _pk_bucket_stats(path: str, pending: set[int]) -> list[dict]:
-    """Per-bucket lineage stats for the just-written pending buckets of a
-    pk-partitioned table.  Buckets that produced no rows are still
-    recorded done (rows_out 0) — deriving done-ness from output presence
-    would re-materialize them forever.
-
-    Deliberately METADATA-CHEAP, and driver-side: row counts come from
-    the parquet FOOTERS of the pending bucket dirs — ``_write``
-    repartitions to exactly ``buckets`` output partitions, so this is
-    O(buckets) footer reads regardless of data size (an Iceberg sink
-    would read manifest counts the same way).  No Spark job at all: the
-    first cut ran an agg + 64-row join + append per element kind, ~6
-    extra AQE-staged jobs per run — a fixed per-instance cost that
-    showed up directly in the 4-instance fleet's scaling efficiency.
-    No content fingerprint here — materialize output is a deterministic
-    recomputation of extract's output, whose lineage DOES carry the
-    content fingerprint.  Paths are always local here:
-    ``PipelineConfig.__post_init__`` rejects ``scheme://`` warehouses
-    (the r3 Spark-scan fallback for remote paths was unreachable dead
-    code, ADVICE r3); a remote sink would read manifest/footer counts
-    through its own metadata API instead."""
-    counts = _bucket_footer_counts(path, "pk_bucket", pending)
-    return [
-        {"bucket": b, "rows_in": -1, "rows_out": counts[b],
-         "content_sha_xor": None}
-        for b in sorted(pending)
-    ]
-
-
-def _clear_partition_dirs(path: str, col: str, buckets: set[int]) -> None:
-    """Delete the partition dirs of buckets about to be rewritten.
-
-    Dynamic partition overwrite only replaces partitions PRESENT in the
-    new output: a re-run bucket whose recomputation now yields zero rows
-    would otherwise keep its stale files forever — and lineage would
-    re-record their counts as current.  Deleting first is idempotent: a
-    crash between delete and write leaves the bucket absent AND
-    unrecorded, so the next run rewrites it."""
-    for b in buckets:
-        shutil.rmtree(os.path.join(path, f"{col}={b}"), ignore_errors=True)
+def _only(df: DataFrame, col: str, buckets: set[int], n: int) -> DataFrame:
+    """``df`` restricted to ``buckets`` of ``col`` (as is when that is all
+    ``n``)."""
+    if len(buckets) == n:
+        return df
+    return df.filter(F.col(col).isin(sorted(buckets)))
 
 
 def _write(
@@ -172,6 +165,104 @@ def _write(
             "partitionOverwriteMode", "dynamic"
         )
     w.parquet(path)
+
+
+def _write_buckets(
+    df: DataFrame, path: str, col: str, buckets: set[int], n: int
+) -> None:
+    """Overwrite the ``buckets`` partitions of ``path`` with ``df``'s rows
+    in them.  Their dirs are cleared first: dynamic partition overwrite
+    replaces only partitions PRESENT in the new output, so a bucket whose
+    recomputation is now empty would keep its stale files (and lineage
+    would count them as current).  A crash between clear and write
+    leaves the bucket absent and unrecorded, so the next run rewrites
+    it."""
+    for b in buckets:
+        shutil.rmtree(os.path.join(path, f"{col}={b}"), ignore_errors=True)
+    _write(_only(df, col, buckets, n), path, [col], buckets=n)
+
+
+def _bucketed_stage(
+    lineage: LineageStore,
+    stage: str,
+    src: DataFrame,
+    col: str,
+    path: str,
+    n: int,
+    build: Callable[[DataFrame], DataFrame],
+    detect_changes: bool,
+) -> None:
+    """Bucket-level resume of a corpus-sized stage (module docstring).
+
+    ``src`` carries the work bucket in ``col``; ``build`` maps pending
+    source rows to output rows carrying the same bucket column.  Under
+    ``detect_changes``, done buckets whose recorded input fingerprint
+    differs from the current one are redone, and fingerprints are
+    recorded; off, the source-side stats stay a narrow (repo, path)
+    scan."""
+    done = lineage.completed_buckets(stage)
+    if detect_changes and done:
+        changed = lineage.changed_buckets(
+            stage,
+            src.groupBy(F.col(col).alias("bucket")).agg(
+                _fingerprint("repo", "path", "content").alias("cur_fp")
+            ),
+        )
+        if changed:
+            lineage.invalidate_buckets(stage, changed)
+            done -= changed
+            log_event("changed_buckets_invalidated", stage=stage,
+                      buckets=sorted(changed))
+    pending = set(range(n)) - done
+    pending_src = _only(src, col, pending, n)
+    # one early-terminating probe skips a rerun with nothing pending
+    if done and not pending_src.limit(1).count():
+        log_event("stage_skipped", stage=stage, done_buckets=len(done))
+        return
+    log_event("stage_start", stage=stage, done_buckets=len(done))
+    stats = [F.count("*").alias("rows_in")]
+    if detect_changes:
+        stats.append(_fingerprint("repo", "path", "content").alias("input_fp"))
+    with StageTimer() as t, ThreadPoolExecutor(max_workers=1) as pool:
+        # the stats job reads only the source: running it concurrently
+        # with the write fills the write's barrier and commit-tail gaps
+        stats_job = pool.submit(
+            pending_src.groupBy(F.col(col).alias("bucket")).agg(*stats).collect
+        )
+        _write_buckets(build(pending_src), path, col, pending, n)
+        rows = [r.asDict() for r in stats_job.result()]
+    lineage.invalidate_stages(*_downstream(stage))
+    lineage.record_buckets(stage, _footer_stats(path, col, rows), t.ms)
+    log_event("stage_done", stage=stage, duration_ms=t.ms)
+
+
+def _atomic_stage(
+    lineage: LineageStore,
+    stage: str,
+    outputs: tuple[str, ...],
+    build: Callable[[], None],
+    input_fp: str | None = None,
+) -> None:
+    """Stage-level resume (module docstring).  Skipped only when recorded
+    done with every output present and, when ``input_fp`` is given (under
+    detect_changes), recorded with that input fingerprint.  Otherwise the
+    outputs are deleted and ``build`` writes them whole — a partitioned
+    dynamic overwrite alone would keep partitions the new output lacks.
+    Staleness needs no check of its own: an upstream stage that wrote
+    new output has already dropped this stage's lineage."""
+    if lineage.stage_done(stage) and all(map(os.path.exists, outputs)):
+        if input_fp is None or lineage.stage_input_fp(stage) == input_fp:
+            log_event("stage_skipped", stage=stage)
+            return
+        log_event("changed_input_invalidated", stage=stage)
+    log_event("stage_start", stage=stage)
+    with StageTimer() as t:
+        for p in outputs:
+            shutil.rmtree(p, ignore_errors=True)
+        build()
+    lineage.invalidate_stages(stage, *_downstream(stage))
+    lineage.record_stage(stage, -1, -1, t.ms, input_fp=input_fp)
+    log_event("stage_done", stage=stage, duration_ms=t.ms)
 
 
 def _dedup_exact_keep_first(df: DataFrame) -> DataFrame:
@@ -226,134 +317,103 @@ def _run_clean(
     the min (repo, path), survives per cluster, so a dup chain a–b–c
     keeps exactly {a}; see ``_near_dup_drop_ids``).
 
-    Resume granularity mirrors each operation's dependency structure:
-
-    * ``exact`` — bucket-level like extract: work buckets key on
-      ``xxhash64(content)``, so ALL copies of identical content land in
-      one bucket and per-bucket dedup IS global dedup; a crash mid-clean
-      re-cleans only missing buckets.
-    * ``minhash`` — stage-level like link: near-dup pairs cross content
-      buckets by construction (LSH bands key on shingle minima, not raw
-      content), so the stage is atomic — computed over the whole corpus,
-      overwritten atomically.
-
-    Either mode, a run that produced new clean output durably invalidates
-    extract + downstream lineage BEFORE recording itself done — the same
-    crash-consistency order the extract stage uses.
-
-    Like extract, bucket/stage resume assumes UNCHANGED input: new source
-    files hash into already-done content buckets and would be silently
-    skipped on a plain rerun.  ``detect_changes`` closes that hole the
-    same way it does for extract — input fingerprints are recorded per
-    cbucket (exact) or per stage (minhash) and compared on reruns;
-    changed/grown buckets are invalidated and re-cleaned.  Unlike
-    extract's fingerprint (an extra content-column scan the default path
-    avoids), the clean stage reads full content anyway, but the flag
-    semantics are kept symmetric so one switch governs the whole
-    pipeline's changed-input behavior."""
+    ``exact`` is a bucketed stage keyed on ``xxhash64(content)``: ALL
+    copies of identical content land in one bucket, so per-bucket dedup
+    IS global dedup.  ``minhash`` is atomic: near-dup pairs cross content
+    buckets by construction (LSH bands key on shingle minima, not raw
+    content).  ``detect_changes`` governs both modes as it does extract,
+    so one switch sets the whole pipeline's changed-input behavior."""
     if dedup not in ("exact", "minhash"):
         raise ValueError(f"dedup must be 'exact' or 'minhash', got {dedup!r}")
     b = cfg.lineage_buckets
     clean_path = cfg.table_path("clean")
-    stage = f"clean_{dedup}"
     src = source_files.withColumn(
         "cbucket", bucket_col("content", n_buckets=b)
     )
-
     if dedup == "exact":
-        done = lineage.completed_buckets(stage)
-        if detect_changes and done:
-            cur_fp = src.groupBy(F.col("cbucket").alias("bucket")).agg(
-                _fingerprint("repo", "path", "content").alias("cur_fp")
-            )
-            changed = lineage.changed_buckets(stage, cur_fp)
-            if changed:
-                lineage.invalidate_buckets(stage, changed)
-                done = done - changed
-                log_event("changed_buckets_invalidated", stage=stage,
-                          buckets=sorted(changed))
-        pending = (
-            src.filter(~F.col("cbucket").isin(list(done))) if done else src
+        _bucketed_stage(
+            lineage, "clean_exact", src, "cbucket", clean_path, b,
+            _dedup_exact_keep_first, detect_changes,
         )
-        ran = not done or pending.limit(1).count() > 0
-        if ran:
-            log_event("stage_start", stage=stage, done_buckets=len(done))
-            with StageTimer() as t:
-                kept = _dedup_exact_keep_first(pending)
-                if os.path.exists(clean_path):
-                    _clear_partition_dirs(
-                        clean_path, "cbucket", set(range(b)) - done
-                    )
-                _write(kept, clean_path, ["cbucket"], buckets=b)
-            # input_fp recorded only under detect_changes, mirroring
-            # extract: fingerprint-less records read as "cannot prove
-            # unchanged" and are conservatively re-cleaned once by a
-            # later detect_changes rerun
-            in_stats = [F.count("*").alias("rows_in")]
-            if detect_changes:
-                in_stats.append(
-                    _fingerprint("repo", "path", "content").alias("input_fp")
-                )
-            src_per_bucket = pending.groupBy(
-                F.col("cbucket").alias("bucket")
-            ).agg(*in_stats)
-            out_per_bucket = (
-                spark.read.parquet(clean_path)
-                .groupBy(F.col("cbucket").alias("bucket"))
-                .agg(
-                    F.count("*").alias("rows_out"),
-                    _fingerprint("repo", "path").alias("content_sha_xor"),
-                )
+    else:
+        from kg.ops.dedup import minhash_duplicates
+
+        def near_dedup():
+            kept = _dedup_exact_keep_first(src).withColumn(
+                "_fid", F.concat_ws("\x01", "repo", "path")
             )
-            per_bucket = src_per_bucket.join(
-                out_per_bucket, "bucket", "left"
-            ).select(
-                "bucket",
-                "rows_in",
-                F.coalesce("rows_out", F.lit(0)).alias("rows_out"),
-                "content_sha_xor",
-                *(["input_fp"] if detect_changes else []),
+            pairs = minhash_duplicates(
+                kept, "_fid", "content", threshold=threshold
             )
-            lineage.invalidate_stages("extract", *_DOWNSTREAM_OF_EXTRACT)
-            lineage.record_buckets(stage, per_bucket, t.ms)
-            log_event("stage_done", stage=stage, duration_ms=t.ms)
-        else:
-            log_event("stage_skipped", stage=stage, done_buckets=len(done))
-    else:  # minhash: atomic stage
-        cur_fp = None
+            kept = kept.join(_near_dup_drop_ids(pairs), "_fid", "left_anti")
+            _write(kept.drop("_fid"), clean_path, ["cbucket"], buckets=b)
+
+        input_fp = None
         if detect_changes:
-            cur_fp = src.agg(
+            input_fp = src.agg(
                 _fingerprint("repo", "path", "content").alias("fp")
             ).first()["fp"]
-        recorded_ok = lineage.stage_done(stage) and os.path.exists(clean_path)
-        if recorded_ok and detect_changes:
-            rec_fp = lineage.stage_input_fp(stage)
-            if rec_fp is None or rec_fp != cur_fp:
-                recorded_ok = False
-                log_event("changed_input_invalidated", stage=stage)
-        if recorded_ok:
-            log_event("stage_skipped", stage=stage)
-        else:
-            from kg.ops.dedup import minhash_duplicates
-
-            log_event("stage_start", stage=stage)
-            with StageTimer() as t:
-                kept = _dedup_exact_keep_first(src).withColumn(
-                    "_fid", F.concat_ws("\x01", "repo", "path")
-                )
-                pairs = minhash_duplicates(
-                    kept, "_fid", "content", threshold=threshold
-                )
-                drop_ids = _near_dup_drop_ids(pairs)
-                kept = kept.join(drop_ids, "_fid", "left_anti").drop("_fid")
-                _write(kept, clean_path, ["cbucket"], buckets=b)
-            lineage.invalidate_stages(
-                "extract", *_DOWNSTREAM_OF_EXTRACT
-            )
-            lineage.invalidate_stages(stage)
-            lineage.record_stage(stage, -1, -1, t.ms, input_fp=cur_fp)
-            log_event("stage_done", stage=stage, duration_ms=t.ms)
+        _atomic_stage(
+            lineage, "clean_minhash", (clean_path,), near_dedup, input_fp
+        )
     return spark.read.parquet(clean_path).drop("cbucket")
+
+
+def _run_materialize(
+    spark: SparkSession,
+    triples: DataFrame,
+    entity_map: DataFrame,
+    cfg: PipelineConfig,
+    lineage: LineageStore,
+) -> list[DataFrame]:
+    """Bucketed materialize, one lineage stage per element kind.  The
+    transform is recomputed (deterministic) but only pending buckets are
+    WRITTEN — the corpus-sized cost at 10^12 files.  The sink is
+    partitioned by a bucket of the partition key, the Spark mapping of
+    the reference's pk-partitioned container (CosmosDb.cs:125-132)."""
+    b = cfg.lineage_buckets
+    kinds = [
+        (cfg.table_path(k), f"materialize_{k}", pk)
+        for k, pk in (("nodes", "partition_key"), ("edges", "out_pk"))
+    ]
+    pending = [
+        set(range(b))
+        - (lineage.completed_buckets(stage) if os.path.exists(path) else set())
+        for path, stage, _ in kinds
+    ]
+    if not any(pending):
+        log_event("stage_skipped", stage="materialize")
+    else:
+        log_event(
+            "stage_start", stage="materialize",
+            pending_node_buckets=len(pending[0]),
+            pending_edge_buckets=len(pending[1]),
+        )
+        with StageTimer() as t, ThreadPoolExecutor(max_workers=2) as pool:
+            # nodes (three aggregations) and edges (projections) share no
+            # computation: writing them concurrently fills one kind's
+            # shuffle barriers and commit tails with the other's tasks
+            futs = [
+                pool.submit(
+                    _write_buckets,
+                    df.withColumn("pk_bucket", bucket_col(pk, n_buckets=b)),
+                    path, "pk_bucket", pend, b,
+                )
+                for df, (path, _, pk), pend in zip(
+                    run_materialize(triples, entity_map, cfg), kinds, pending
+                )
+                if pend
+            ]
+            for f in futs:
+                f.result()
+        for (path, stage, _), pend in zip(kinds, pending):
+            if pend:
+                rows = [{"bucket": x, "rows_in": -1} for x in sorted(pend)]
+                lineage.record_buckets(
+                    stage, _footer_stats(path, "pk_bucket", rows), t.ms
+                )
+        log_event("stage_done", stage="materialize", duration_ms=t.ms)
+    return [spark.read.parquet(p).drop("pk_bucket") for p, _, _ in kinds]
 
 
 def run_pipeline(
@@ -373,15 +433,11 @@ def run_pipeline(
         lineage_buckets=cfg.lineage_buckets, dedup=dedup,
     )
     if restart:  # O15 + O17: truncate sink and checkpoints
-        for t in (
-            "clean", "triples", "mentions", "matches", "entity_map",
-            "nodes", "edges",
-        ):
+        for t in _TABLES:
             shutil.rmtree(cfg.table_path(t), ignore_errors=True)
         lineage.reset()
         log_event("restart_truncated", warehouse=cfg.warehouse)
 
-    # ---- clean (optional dedup stage, VERDICT r3 next #5) -----------------
     if dedup is not None:
         source_files = _run_clean(
             spark, source_files, cfg, lineage, dedup, dedup_threshold,
@@ -390,270 +446,43 @@ def run_pipeline(
 
     b = cfg.lineage_buckets
     triples_path = cfg.table_path("triples")
-
-    # ---- extract (bucket-level resume) ------------------------------------
-    src = source_files.withColumn(
-        "bucket", bucket_col("repo", "path", n_buckets=b)
+    bucket = bucket_col("repo", "path", n_buckets=b)
+    _bucketed_stage(
+        lineage, "extract", source_files.withColumn("bucket", bucket),
+        "bucket", triples_path, b,
+        lambda pending: run_extract(
+            pending.drop("bucket"), engine=cfg.extract_engine
+        ).withColumn("bucket", bucket),
+        detect_changes,
     )
-    done = lineage.completed_buckets("extract")
-    if detect_changes and done:
-        cur_fp = src.groupBy("bucket").agg(
-            _fingerprint("repo", "path", "content").alias("cur_fp")
-        )
-        changed = lineage.changed_buckets("extract", cur_fp)
-        if changed:
-            lineage.invalidate_buckets("extract", changed)
-            done = done - changed
-            log_event("changed_buckets_invalidated", stage="extract",
-                      buckets=sorted(changed))
-    pending = src.filter(~F.col("bucket").isin(list(done))) if done else src
-    # no-op short-circuit: a rerun with every bucket recorded skips the
-    # whole extract job (one cheap early-terminating existence probe)
-    extract_ran = not done or pending.limit(1).count() > 0
-    if extract_ran:
-        log_event("stage_start", stage="extract", done_buckets=len(done))
-        # the source-side lineage agg (defined below, harvested after the
-        # write) reads ONLY the source table, so its job is independent
-        # of the triples write job
-        src_stats = [F.count("*").alias("rows_in")]
-        if detect_changes:
-            src_stats.append(
-                _fingerprint("repo", "path", "content").alias("input_fp")
-            )
-        with StageTimer() as t:
-            # extraction is per-row (no keyed shuffle), so hot-repo skew
-            # is irrelevant here and repartitioning the full content
-            # would be a wasted shuffle.  Skew handling happens where
-            # keys appear: the triples write keys on bucket=
-            # hash(repo,path) (uniform by construction — this IS the
-            # salt: path salts the hot repo), and downstream joins key
-            # on sha256 ids (uniform).
-            new_triples = run_extract(
-                pending.drop("bucket"), engine=cfg.extract_engine
-            ).withColumn(
-                "bucket", bucket_col("repo", "path", n_buckets=b)
-            )
-            # dynamic partition overwrite: only the buckets present in
-            # this run's output are replaced — a crash between data write
-            # and lineage append just rewrites those buckets
-            # byte-identically.  Pending buckets whose re-extraction
-            # yields ZERO rows are absent from the output, so their
-            # stale dirs are cleared explicitly first.
-            if os.path.exists(triples_path):
-                _clear_partition_dirs(
-                    triples_path, "bucket", set(range(b)) - done
-                )
-            # run the narrow source-side agg CONCURRENTLY with the write
-            # (guide §2.6: independent jobs fill each other's barrier and
-            # commit-tail gaps).  Only the computation overlaps — the
-            # result is harvested after the write returns, and no lineage
-            # is recorded until both are done, so the crash ordering
-            # (data durable before lineage) is unchanged.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=1) as _pool:
-                _stats_fut = _pool.submit(
-                    pending.groupBy("bucket").agg(*src_stats).collect
-                )
-                _write(new_triples, triples_path, ["bucket"], buckets=b)
-        # lineage is recorded from the SOURCE side (group pending input
-        # rows by bucket), so a bucket whose files all yield zero triples
-        # is still marked done — deriving it from the output would
-        # re-extract such buckets forever on real corpora.  rows_in counts
-        # actual input rows.  input_fp (the changed-input fingerprint) is
-        # recorded ONLY under detect_changes: it needs the content column,
-        # and the default path must not re-read the full corpus content
-        # just to compute a fingerprint nobody asked for — at 100 TB this
-        # agg must stay a narrow (repo, path) scan that column pruning
-        # answers from two small parquet streams.  A later detect_changes
-        # run treats fingerprint-less records as "cannot prove unchanged"
-        # and conservatively re-extracts them once (see changed_buckets).
-        # (src_stats defined above the timer block; the agg ran
-        # concurrently with the triples write and is harvested here,
-        # after the write returned.)
-        src_rows = {r["bucket"]: r for r in _stats_fut.result()}
-        # rows_out from parquet FOOTERS of the just-written bucket dirs
-        # (O(buckets) metadata reads) instead of a groupBy re-scan of the
-        # corpus-sized triples table: the old output-side agg also
-        # computed a content_sha fingerprint nothing ever consumed —
-        # invalidation decisions ride on the INPUT fingerprint
-        # (detect_changes) alone, and the output is a deterministic
-        # recomputation of the recorded input.  Same metadata-cheap
-        # discipline as _pk_bucket_stats; measured ~3-5 s off the stage
-        # at the 200k-file bench.
-        out_counts = _bucket_footer_counts(
-            triples_path, "bucket", set(src_rows)
-        )
-        per_bucket = [
-            {
-                "bucket": bkt,
-                "rows_in": int(src_rows[bkt]["rows_in"]),
-                "rows_out": out_counts.get(bkt, 0),
-                "content_sha_xor": None,
-                **(
-                    {"input_fp": src_rows[bkt]["input_fp"]}
-                    if detect_changes
-                    else {}
-                ),
-            }
-            for bkt in sorted(src_rows)
-        ]
-        # extract produced new output ⇒ every downstream stage's inputs
-        # changed.  Their lineage is dropped DURABLY and BEFORE extract's
-        # own rows are recorded: with the in-process flag alone, a crash
-        # after this append but before downstream reruns would leave a
-        # later run seeing extract fully done (extract_ran=False) and
-        # stale downstream lineage still 'done' — permanently
-        # inconsistent outputs.  Order matters: crash between the two
-        # leaves downstream marked stale (safe rerun), never extract
-        # done over stale downstream.
-        lineage.invalidate_stages(*_DOWNSTREAM_OF_EXTRACT)
-        lineage.record_buckets("extract", per_bucket, t.ms)
-        log_event("stage_done", stage="extract", duration_ms=t.ms)
-    else:
-        log_event("stage_skipped", stage="extract", done_buckets=len(done))
     triples = spark.read.parquet(triples_path).drop("bucket")
 
-    # ---- link (stage-level resume) -----------------------------------------
-    # extract_ran ⇒ downstream inputs changed ⇒ downstream must rebuild
     mentions_path = cfg.table_path("mentions")
     matches_path = cfg.table_path("matches")
-    if extract_ran or not (
-        lineage.stage_done("link")
-        and os.path.exists(mentions_path)
-        and os.path.exists(matches_path)
-    ):
-        log_event("stage_start", stage="link")
-        with StageTimer() as t:
-            # the durable mentions table IS the materialization of the
-            # corpus-sized distinct: write it first, read it back, and
-            # re-derive shingles map-side (pure function of norm) — one
-            # materialization instead of localCheckpoint + a second
-            # write of the same vocabulary (VERDICT r4 #5)
-            _write(
-                mentions_from_triples(triples, cfg).drop("shingles"),
-                mentions_path,
-            )
-            mentions = add_shingles(
-                spark.read.parquet(mentions_path), cfg
-            )
-            matches = match_pairs(mentions, cfg)
-            _write(matches, matches_path)
-        # drop any previous row first: record_stage appends, and a rerun
-        # (e.g. a path recreated after manual deletion) would otherwise
-        # accumulate duplicate 'done' rows for the stage
-        lineage.invalidate_stages("link")
-        lineage.record_stage("link", -1, -1, t.ms)
-        log_event("stage_done", stage="link", duration_ms=t.ms)
-    else:
-        log_event("stage_skipped", stage="link")
+
+    def link():
+        # the durable mentions table IS the materialization of the
+        # corpus-sized distinct: read it back and re-derive shingles
+        # map-side (a pure function of norm) instead of checkpointing
+        _write(
+            mentions_from_triples(triples, cfg).drop("shingles"),
+            mentions_path,
+        )
+        mentions = add_shingles(spark.read.parquet(mentions_path), cfg)
+        _write(match_pairs(mentions, cfg), matches_path)
+
+    _atomic_stage(lineage, "link", (mentions_path, matches_path), link)
     mentions = spark.read.parquet(mentions_path)
     matches = spark.read.parquet(matches_path)
 
-    # ---- canonicalize --------------------------------------------------------
     emap_path = cfg.table_path("entity_map")
-    if extract_ran or not (
-        lineage.stage_done("canonicalize") and os.path.exists(emap_path)
-    ):
-        log_event("stage_start", stage="canonicalize")
-        with StageTimer() as t:
-            emap = run_canonicalize(mentions, matches)
-            _write(emap, emap_path)
-        lineage.invalidate_stages("canonicalize")
-        lineage.record_stage("canonicalize", -1, -1, t.ms)
-        log_event("stage_done", stage="canonicalize", duration_ms=t.ms)
-    else:
-        log_event("stage_skipped", stage="canonicalize")
+    _atomic_stage(
+        lineage, "canonicalize", (emap_path,),
+        lambda: _write(run_canonicalize(mentions, matches), emap_path),
+    )
     entity_map = spark.read.parquet(emap_path)
 
-    # ---- materialize (bucket-level resume) -----------------------------------
-    # the other corpus-sized stage: nodes/edges are written per pk_bucket
-    # with dynamic overwrite and lineage records one row per bucket per
-    # element kind, so a crash mid-materialize reruns only the missing
-    # buckets — the Spark mapping of the reference's per-page checkpoints
-    # for BOTH element kinds (Migrator.cs:80-81, 129-130).  The transform
-    # is recomputed (deterministic), but only pending buckets are WRITTEN,
-    # which is the corpus-sized cost at 10^12 files.
-    nodes_path = cfg.table_path("nodes")
-    edges_path = cfg.table_path("edges")
-    # NOTE: no extract_ran-gated invalidation here — the extract block
-    # already dropped downstream lineage DURABLY before recording itself
-    # done, so a crash-then-rerun cannot see stale 'done' rows.
-    all_buckets = set(range(b))
-    pend_n = (
-        all_buckets - lineage.completed_buckets("materialize_nodes")
-        if os.path.exists(nodes_path)
-        else all_buckets
-    )
-    pend_e = (
-        all_buckets - lineage.completed_buckets("materialize_edges")
-        if os.path.exists(edges_path)
-        else all_buckets
-    )
-    if pend_n or pend_e:
-        log_event(
-            "stage_start", stage="materialize",
-            pending_node_buckets=len(pend_n), pending_edge_buckets=len(pend_e),
-        )
-        with StageTimer() as t:
-            nodes, edges = run_materialize(triples, entity_map, cfg)
-            # partition the sink by a bucket of the partition key — the
-            # Spark mapping of the reference's pk-partitioned container
-            # (CosmosDb.cs:125-132); bucketing bounds file counts at scale.
-            nodes = nodes.withColumn(
-                "pk_bucket", bucket_col("partition_key", n_buckets=b)
-            )
-            edges = edges.withColumn(
-                "pk_bucket", bucket_col("out_pk", n_buckets=b)
-            )
-
-            def _write_kind(pend, df, path):
-                if not pend:
-                    return
-                out = (
-                    df
-                    if len(pend) == b
-                    else df.filter(F.col("pk_bucket").isin(list(pend)))
-                )
-                # a pending bucket whose recomputation is now empty is
-                # absent from the output — clear stale dirs first (same
-                # rationale as the extract write)
-                if os.path.exists(path):
-                    _clear_partition_dirs(path, "pk_bucket", pend)
-                _write(out, path, ["pk_bucket"], buckets=b)
-
-            # the two element kinds share no computation (nodes are three
-            # aggregations, edges are projections) and their writes are
-            # independent job graphs: submit them CONCURRENTLY so one
-            # kind's shuffle barriers and write-commit tails (64 write
-            # tasks never saturate the slots to the end) are filled by
-            # the other's tasks.  Spark job submission is thread-safe;
-            # measured ~2 s off the materialize stage at 200k files.
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=2) as pool:
-                futs = [
-                    pool.submit(_write_kind, pend_n, nodes, nodes_path),
-                    pool.submit(_write_kind, pend_e, edges, edges_path),
-                ]
-                for f in futs:
-                    f.result()  # re-raise either kind's failure
-        # lineage after the data writes: a crash in between just rewrites
-        # the pending buckets byte-identically on the next run
-        for pend, path, stage in (
-            (pend_n, nodes_path, "materialize_nodes"),
-            (pend_e, edges_path, "materialize_edges"),
-        ):
-            if pend:
-                lineage.record_buckets(
-                    stage, _pk_bucket_stats(path, pend), t.ms
-                )
-        log_event("stage_done", stage="materialize", duration_ms=t.ms)
-    else:
-        log_event("stage_skipped", stage="materialize")
-    nodes = spark.read.parquet(nodes_path).drop("pk_bucket")
-    edges = spark.read.parquet(edges_path).drop("pk_bucket")
-
+    nodes, edges = _run_materialize(spark, triples, entity_map, cfg, lineage)
     return {
         "triples": triples,
         "mentions": mentions,

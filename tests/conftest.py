@@ -1,8 +1,17 @@
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from kg.session import get_spark
+
+# The whole suite shares one driver JVM.  get_spark's 48g default heap lets
+# G1 grow the heap (and keep checkpointed blocks the ContextCleaner has not
+# yet collected) until the host runs out of memory and the kernel kills the
+# JVM mid-suite.  The test inputs are small; a 4g heap bounds the JVM's
+# footprint and makes it collect.  An explicit KG_DRIVER_MEM still wins.
+os.environ.setdefault("KG_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")
@@ -13,6 +22,4 @@ def spark():
 
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
-    import os
-
     return os.environ.get("KG_TEST_SF_DIR", "/root/testdata/sf0.001")

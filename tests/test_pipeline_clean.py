@@ -255,3 +255,51 @@ def test_clean_minhash_detect_changes_picks_up_grown_source(
         spark, grown, cfg_ref, restart=True, dedup="minhash"
     )
     assert _snapshot(out2) == _snapshot(ref)
+
+
+def test_clean_minhash_detect_changes_drops_new_victim(spark, tmp_path_factory):
+    """A detect_changes rerun that turns a previously kept file into a
+    near-dup victim must drop it from the clean table.  The victim's
+    content bucket is absent from the rebuilt output, so a partition-wise
+    overwrite would keep its old dir: the rerun must equal a restart
+    build over the same input."""
+    from kg.schemas import SOURCE_FILES
+
+    rows = _hand_rows()
+    cfg = PipelineConfig(
+        warehouse=str(tmp_path_factory.mktemp("clean_mh_victim")),
+        lineage_buckets=11,
+    )
+    run_pipeline(
+        spark, spark.createDataFrame(rows, SOURCE_FILES), cfg, restart=True,
+        dedup="minhash", dedup_threshold=0.5, detect_changes=True,
+    )
+    # the near-copy sorts before org/repo0, so org/repo0 becomes the victim
+    near = rows[0][4] + "\n# forked with a trailing note\n"
+    grown = spark.createDataFrame(
+        rows + [("aa-fork/org/repo0", "src/alpha.py", "c0", "python", near)],
+        SOURCE_FILES,
+    )
+    out = _snapshot(run_pipeline(
+        spark, grown, cfg, dedup="minhash", dedup_threshold=0.5,
+        detect_changes=True,
+    ))
+    ref_cfg = PipelineConfig(
+        warehouse=str(tmp_path_factory.mktemp("clean_mh_victim_ref")),
+        lineage_buckets=11,
+    )
+    ref = _snapshot(run_pipeline(
+        spark, grown, ref_cfg, restart=True, dedup="minhash",
+        dedup_threshold=0.5,
+    ))
+
+    def clean(c):
+        return sorted(
+            (r.repo, r.path)
+            for r in spark.read.parquet(c.table_path("clean")).collect()
+        )
+
+    assert clean(cfg) == clean(ref_cfg)
+    assert len(clean(cfg)) == 6
+    assert "org/repo0" not in {repo for repo, _ in clean(cfg)}
+    assert out == ref

@@ -278,7 +278,7 @@ def test_crash_after_extract_recorded_still_rebuilds_downstream(
         run_pipeline(spark, src, cfg, detect_changes=True)
     monkeypatch.setattr(P, "mentions_from_triples", real_mft)
 
-    # run C: extract has nothing pending (extract_ran=False), but the
+    # run C: extract has nothing pending (it is skipped), but the
     # crashed run's durable invalidation forces downstream to rebuild
     store = LineageStore(spark, cfg.table_path("lineage"))
     assert "link" not in {
@@ -390,6 +390,37 @@ def test_materialize_resume_rewrites_only_missing_buckets(
     }
     assert mtimes_after == mtimes_before
     assert sorted(store.completed_buckets("materialize_nodes")) == done
+
+
+@pytest.mark.parametrize(
+    "table, stage", [("mentions", "link"), ("entity_map", "canonicalize")]
+)
+def test_missing_output_rebuilds_recorded_stage(
+    spark, tmp_path_factory, caplog, table, stage
+):
+    """Stage-level resume checks the outputs, not just lineage: a table
+    deleted while its stage still reads done is rebuilt by a plain
+    rerun, and the graph equals the first run's."""
+    import json
+    import logging
+    import os
+
+    cfg = _cfg(tmp_path_factory, f"lost_{table}")
+    src = source_files_df(spark, N)
+    golden = _snapshot(run_pipeline(spark, src, cfg, restart=True))
+    store = LineageStore(spark, cfg.table_path("lineage"))
+    shutil.rmtree(cfg.table_path(table))
+    assert store.stage_done(stage)
+
+    with caplog.at_level(logging.INFO, logger="kg"):
+        out = run_pipeline(spark, src, cfg)
+    events = [
+        json.loads(r.getMessage()) for r in caplog.records if r.name == "kg"
+    ]
+    assert {"event": "stage_start", "stage": stage} in events
+    assert os.path.exists(cfg.table_path(table))
+    assert store.stage_done(stage)
+    assert _snapshot(out) == golden
 
 
 def test_restart_truncates_everything(spark, tmp_path_factory):
