@@ -21,14 +21,15 @@ in one of two shapes:
     recorded done and its outputs exist; otherwise its whole output is
     rebuilt and overwritten.
 
-Both shapes share one crash order: the stage's data is durable → the
-lineage of every stage downstream of it is dropped → the stage records
-itself done.  A crash between two steps leaves either the stage
-unrecorded (the rerun rewrites the same bytes) or its downstream
-unrecorded (downstream reruns), never a stage done over stale downstream
-output.  So a changed-input rerun converges to the state of a clean run —
-the Spark mapping of the reference's ``enableUpsert: true`` semantics for
-*modified* documents (``CosmosDb.cs:144``).
+Bucketed stages order a write as: data durable → downstream lineage
+dropped → buckets recorded done.  Atomic stages drop their own and their
+downstream lineage FIRST, then delete their outputs, rebuild and record
+themselves done, so a crash mid-rebuild never leaves a half-written
+output under a ``done`` row.  A crash between two steps leaves the stage
+or its downstream unrecorded, and the rerun redoes it, never a stage
+done over stale output.  So a changed-input rerun converges to the state
+of a clean run — the Spark mapping of the reference's ``enableUpsert:
+true`` semantics for *modified* documents (``CosmosDb.cs:144``).
 
 Changed-input detection (``detect_changes=True``): a stage records an
 order-insensitive fingerprint of its input rows (per bucket, or per stage
@@ -246,21 +247,23 @@ def _atomic_stage(
     """Stage-level resume (module docstring).  Skipped only when recorded
     done with every output present and, when ``input_fp`` is given (under
     detect_changes), recorded with that input fingerprint.  Otherwise the
-    outputs are deleted and ``build`` writes them whole — a partitioned
-    dynamic overwrite alone would keep partitions the new output lacks.
-    Staleness needs no check of its own: an upstream stage that wrote
-    new output has already dropped this stage's lineage."""
+    stage's own and downstream lineage is dropped first, so a crash
+    mid-rebuild leaves it unrecorded; then the outputs are deleted and
+    ``build`` writes them whole — a partitioned dynamic overwrite alone
+    would keep partitions the new output lacks.  Staleness needs no check
+    of its own: an upstream stage that wrote new output has already
+    dropped this stage's lineage."""
     if lineage.stage_done(stage) and all(map(os.path.exists, outputs)):
         if input_fp is None or lineage.stage_input_fp(stage) == input_fp:
             log_event("stage_skipped", stage=stage)
             return
         log_event("changed_input_invalidated", stage=stage)
     log_event("stage_start", stage=stage)
+    lineage.invalidate_stages(stage, *_downstream(stage))
     with StageTimer() as t:
         for p in outputs:
             shutil.rmtree(p, ignore_errors=True)
         build()
-    lineage.invalidate_stages(stage, *_downstream(stage))
     lineage.record_stage(stage, -1, -1, t.ms, input_fp=input_fp)
     log_event("stage_done", stage=stage, duration_ms=t.ms)
 

@@ -12,6 +12,39 @@ import os
 from pyspark.sql import SparkSession
 
 
+# a container's memory limit (cgroup v2, then v1), which the physical
+# memory sysconf reports does not reflect
+_CGROUP_LIMITS = (
+    "/sys/fs/cgroup/memory.max",
+    "/sys/fs/cgroup/memory/memory.limit_in_bytes",
+)
+
+
+def host_memory_bytes(limit_files: tuple[str, ...] = _CGROUP_LIMITS) -> int:
+    """Memory this process may use: physical memory, or the smaller
+    limit in ``limit_files``.  A file that is missing or reads ``max``
+    sets no limit; cgroup v1's "unlimited" is a number above physical
+    memory, so ``min`` ignores it."""
+    mem = os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+    for path in limit_files:
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        if raw.isdigit():
+            mem = min(mem, int(raw))
+    return mem
+
+
+def default_driver_memory(mem_bytes: int) -> str:
+    """Driver heap default for a host with ``mem_bytes`` of usable memory
+    (``host_memory_bytes``): half of it, capped at 48g.  A fixed 48g let
+    G1 grow the heap past what a small host has before it collected, and
+    the kernel then killed the JVM."""
+    return f"{min(mem_bytes // 2, 48 << 30) >> 20}m"
+
+
 def get_spark(
     app_name: str = "kg",
     cores: int | None = None,
@@ -22,7 +55,8 @@ def get_spark(
 
     ``cores`` controls local parallelism (``local[cores]``); defaults to
     ``$SPARK_GRAFT_CPUS`` or ``*``.  On a real cluster the master is set by
-    spark-submit and this falls through untouched.
+    spark-submit and this falls through untouched.  The driver heap is
+    ``$KG_DRIVER_MEM`` or ``default_driver_memory`` of this host.
     """
     if cores is None:
         env = os.environ.get("SPARK_GRAFT_CPUS")
@@ -54,6 +88,18 @@ def get_spark(
         # scale; on a 100 TB cluster raise KG_SPLIT_BYTES — the knob
         # trades scheduler overhead vs per-task Python work.
         .config("spark.sql.files.maxPartitionBytes", os.environ.get("KG_SPLIT_BYTES", "4m"))
+        # Spark charges every file an open cost (default 4 MB) when it
+        # packs splits, so at the default each ~20 KB file of a 64-bucket
+        # warehouse table filled a whole split: one task per bucket dir
+        # on every scan.  A 64 KB open cost packs such a table into 1-2
+        # splits.  The split size is min(maxPartitionBytes, max(open
+        # cost, total bytes / minPartitionNum)); minPartitionNum=1 keeps
+        # an input under the split size in ONE split, as at the default
+        # (else a small single-row-group source is cut into per-core
+        # splits, all but one empty, that still start Python workers),
+        # and inputs of a split or more still split at maxPartitionBytes.
+        .config("spark.sql.files.openCostInBytes", "64k")
+        .config("spark.sql.files.minPartitionNum", "1")
         .config("spark.sql.session.timeZone", "UTC")
         # partition discovery of the 64-bucket warehouse tables: the
         # default threshold (32 dirs) pushes listing into a distributed
@@ -74,7 +120,11 @@ def get_spark(
             os.environ.get("KG_PARQUET_CODEC", "zstd"),
         )
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("KG_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("KG_DRIVER_MEM")
+            or default_driver_memory(host_memory_bytes()),
+        )
     )
     # Only pin the master when none is set (spark-submit / cluster launch
     # defines spark.master as a system property → visible in SparkConf).

@@ -6,17 +6,22 @@ import pytest
 
 from kg.session import get_spark
 
-# The whole suite shares one driver JVM.  get_spark's 48g default heap lets
-# G1 grow the heap (and keep checkpointed blocks the ContextCleaner has not
-# yet collected) until the host runs out of memory and the kernel kills the
-# JVM mid-suite.  The test inputs are small; a 4g heap bounds the JVM's
-# footprint and makes it collect.  An explicit KG_DRIVER_MEM still wins.
+# The whole suite shares one driver JVM.  A large heap (get_spark defaults
+# to half the host's memory) lets G1 keep checkpointed blocks the
+# ContextCleaner has not yet collected while Python workers and other
+# processes need that memory too.  The test inputs are small; a 4g heap
+# bounds the JVM's footprint and makes it collect.  An explicit
+# KG_DRIVER_MEM still wins.
 os.environ.setdefault("KG_DRIVER_MEM", "4g")
 
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("kg-tests", cores=8, shuffle_partitions=8)
+    # one task slot per CPU, 2 to 8: slots beyond the CPUs add Python
+    # workers and contention (a 3-row ivf_pq_topk collect took 30-40 s at
+    # local[8] on a 4-CPU host, 10-16 s at local[4])
+    cores = min(8, max(2, len(os.sched_getaffinity(0))))
+    s = get_spark("kg-tests", cores=cores, shuffle_partitions=8)
     yield s
 
 

@@ -34,6 +34,24 @@ def _snapshot(out):
     return nodes, edges
 
 
+def _copy(warehouse: str, tmp_path_factory, name) -> PipelineConfig:
+    """A config over a fresh warehouse holding a copy of ``warehouse``'s
+    tables and lineage (file mtimes kept)."""
+    cfg = _cfg(tmp_path_factory, name)
+    shutil.copytree(warehouse, cfg.warehouse, dirs_exist_ok=True)
+    return cfg
+
+
+@pytest.fixture(scope="module")
+def plain_build(spark, tmp_path_factory):
+    """Restart build of the N-file corpus in default mode (no input
+    fingerprints recorded), made once per module: (warehouse, snapshot).
+    Tests work on a ``_copy`` of the warehouse."""
+    cfg = _cfg(tmp_path_factory, "plain_build")
+    out = run_pipeline(spark, source_files_df(spark, N), cfg, restart=True)
+    return cfg.warehouse, _snapshot(out)
+
+
 def _seeded_store(spark, tmp_path_factory) -> LineageStore:
     store = LineageStore(
         spark, str(tmp_path_factory.mktemp("lineage_unit")) + "/lineage"
@@ -90,11 +108,10 @@ def test_lineage_partial_tmp_rolls_back(spark, tmp_path_factory):
     assert not os.path.exists(store.path + ".old")
 
 
-def test_rerun_is_idempotent(spark, tmp_path_factory):
-    cfg = _cfg(tmp_path_factory, "idem")
+def test_rerun_is_idempotent(spark, tmp_path_factory, plain_build):
+    warehouse, snap1 = plain_build
+    cfg = _copy(warehouse, tmp_path_factory, "idem")
     src = source_files_df(spark, N)
-    out1 = run_pipeline(spark, src, cfg, restart=True)
-    snap1 = _snapshot(out1)
     out2 = run_pipeline(spark, src, cfg)  # rerun, nothing to do
     snap2 = _snapshot(out2)
     assert snap1 == snap2
@@ -102,18 +119,19 @@ def test_rerun_is_idempotent(spark, tmp_path_factory):
     assert out2["nodes"].count() == out2["nodes"].select("id").distinct().count()
 
 
-def test_resume_processes_only_missing_buckets(spark, tmp_path_factory):
-    cfg = _cfg(tmp_path_factory, "resume")
+def test_resume_processes_only_missing_buckets(
+    spark, tmp_path_factory, plain_build
+):
     src = source_files_df(spark, N)
-
-    # clean full run → golden snapshot
+    # clean full run → golden snapshot, independent of the build the
+    # crash is simulated on
     golden_cfg = _cfg(tmp_path_factory, "golden")
     golden = _snapshot(run_pipeline(spark, src, golden_cfg, restart=True))
 
     # simulated crash: run fully, then delete half the extract lineage AND
     # the stage outputs downstream of extract — the rerun must re-extract
     # only the missing buckets and rebuild downstream.
-    run_pipeline(spark, src, cfg, restart=True)
+    cfg = _copy(plain_build[0], tmp_path_factory, "resume")
     store = LineageStore(spark, cfg.table_path("lineage"))
     keep = store.read().filter(
         (F.col("stage") == "extract") & (F.col("bucket") < 4)
@@ -250,7 +268,7 @@ def test_changed_bucket_with_zero_output_clears_stale_rows(
 
 
 def test_crash_after_extract_recorded_still_rebuilds_downstream(
-    spark, tmp_path_factory, monkeypatch
+    spark, tmp_path_factory, monkeypatch, plain_build
 ):
     """Durable downstream invalidation: a run that re-extracts new input,
     records extract lineage, then CRASHES before link completes must not
@@ -261,9 +279,9 @@ def test_crash_after_extract_recorded_still_rebuilds_downstream(
     downstream stage against the stale 'done' lineage."""
     import kg.pipeline as P
 
-    cfg = _cfg(tmp_path_factory, "crash_ds")
     src = source_files_df(spark, N)
-    golden = _snapshot(run_pipeline(spark, src, cfg, restart=True))
+    warehouse, golden = plain_build
+    cfg = _copy(warehouse, tmp_path_factory, "crash_ds")
 
     # run B: a detect_changes rerun (run A recorded no fingerprints, so
     # every bucket is conservatively re-extracted) records extract
@@ -289,17 +307,16 @@ def test_crash_after_extract_recorded_still_rebuilds_downstream(
 
 
 def test_default_run_skips_fingerprint_then_detect_changes_recovers(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, plain_build
 ):
     """The default path records NO input fingerprint (no content-column
     re-scan of the corpus); a later detect_changes run cannot prove those
     buckets unchanged, so it conservatively re-extracts them once and
     upgrades the records with fingerprints — converging to the same
     state, after which detection is incremental again."""
-    cfg = _cfg(tmp_path_factory, "fp_gate")
     src = source_files_df(spark, N)
-    out1 = run_pipeline(spark, src, cfg, restart=True)
-    n1 = out1["triples"].count()
+    cfg = _copy(plain_build[0], tmp_path_factory, "fp_gate")
+    n1 = spark.read.parquet(cfg.table_path("triples")).count()
     store = LineageStore(spark, cfg.table_path("lineage"))
     ext = store.read().filter("stage = 'extract'")
     assert ext.filter("input_fp IS NOT NULL").count() == 0
@@ -355,7 +372,7 @@ def test_zero_output_bucket_is_marked_done(spark, tmp_path_factory):
 
 
 def test_materialize_resume_rewrites_only_missing_buckets(
-    spark, tmp_path_factory
+    spark, tmp_path_factory, plain_build
 ):
     """Kill-mid-materialize (VERDICT r2 #6): with extract fully done, a
     rerun must rewrite ONLY the node buckets whose lineage is missing —
@@ -363,9 +380,9 @@ def test_materialize_resume_rewrites_only_missing_buckets(
     clean-run state."""
     import os
 
-    cfg = _cfg(tmp_path_factory, "mat_resume")
     src = source_files_df(spark, N)
-    golden = _snapshot(run_pipeline(spark, src, cfg, restart=True))
+    warehouse, golden = plain_build
+    cfg = _copy(warehouse, tmp_path_factory, "mat_resume")
 
     store = LineageStore(spark, cfg.table_path("lineage"))
     done = sorted(store.completed_buckets("materialize_nodes"))
@@ -396,7 +413,7 @@ def test_materialize_resume_rewrites_only_missing_buckets(
     "table, stage", [("mentions", "link"), ("entity_map", "canonicalize")]
 )
 def test_missing_output_rebuilds_recorded_stage(
-    spark, tmp_path_factory, caplog, table, stage
+    spark, tmp_path_factory, caplog, plain_build, table, stage
 ):
     """Stage-level resume checks the outputs, not just lineage: a table
     deleted while its stage still reads done is rebuilt by a plain
@@ -405,9 +422,9 @@ def test_missing_output_rebuilds_recorded_stage(
     import logging
     import os
 
-    cfg = _cfg(tmp_path_factory, f"lost_{table}")
     src = source_files_df(spark, N)
-    golden = _snapshot(run_pipeline(spark, src, cfg, restart=True))
+    warehouse, golden = plain_build
+    cfg = _copy(warehouse, tmp_path_factory, f"lost_{table}")
     store = LineageStore(spark, cfg.table_path("lineage"))
     shutil.rmtree(cfg.table_path(table))
     assert store.stage_done(stage)
@@ -471,3 +488,44 @@ def test_restart_clears_rewrite_scratch_dirs(spark, tmp_path_factory):
     store2.reset()
     assert store2.completed_buckets("extract") == set()
     assert not os.path.exists(store2.path + ".old")
+
+
+def _table(spark, path: str) -> list[tuple]:
+    df = spark.read.parquet(path)
+    return sorted(map(tuple, df.select(sorted(df.columns)).collect()))
+
+
+def test_crash_mid_atomic_rebuild_is_not_trusted(
+    spark, tmp_path_factory, monkeypatch, plain_build
+):
+    """A crash while an atomic stage rebuilds must not leave its
+    half-written output under its old ``done`` row: the stage drops its
+    lineage before it deletes its outputs, so a plain rerun rebuilds it
+    and every table equals a restart build."""
+    import kg.pipeline as P
+
+    cfg = _copy(plain_build[0], tmp_path_factory, "crash_atomic")
+    src = source_files_df(spark, N)
+    golden = {
+        t: _table(spark, cfg.table_path(t))
+        for t in ("mentions", "matches", "entity_map", "nodes", "edges")
+    }
+    matches_path = cfg.table_path("matches")
+    schema = spark.read.parquet(matches_path).schema
+    shutil.rmtree(matches_path)
+
+    real_write = P._write
+
+    def partial_write(df, path, *a, **kw):
+        if path != matches_path:
+            return real_write(df, path, *a, **kw)
+        real_write(spark.createDataFrame([], schema), path, *a, **kw)
+        raise RuntimeError("crash mid-write")
+
+    monkeypatch.setattr(P, "_write", partial_write)
+    with pytest.raises(RuntimeError, match="crash mid-write"):
+        run_pipeline(spark, src, cfg)
+    monkeypatch.setattr(P, "_write", real_write)
+
+    run_pipeline(spark, src, cfg)
+    assert {t: _table(spark, cfg.table_path(t)) for t in golden} == golden
