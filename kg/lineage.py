@@ -3,8 +3,8 @@
 Generalizes the reference's checkpoint store (RocksDB KV holding one page
 high-water-mark per element kind per shard, ``NeoToCosmos/Cache.cs:36-44``,
 ``Migrator.cs:66-68,80-81``) into a lineage *table*: one row per
-(stage, bucket) with row counts, an order-insensitive content checksum and
-a status — the Spark-native analogue of "simply rerun the command to
+(stage, bucket) with row counts, an order-insensitive input fingerprint
+and a status — the Spark-native analogue of "simply rerun the command to
 resume" (reference ``README.md:42``).
 
 The table is O(buckets) rows of METADATA, so every bookkeeping operation
@@ -16,8 +16,8 @@ parquet-footer bucket stats; a trivial-corpus pipeline ran 77 Spark jobs,
 most of them metadata).  The reference reads its RocksDB checkpoints
 in-process for the identical reason.  Spark appears in exactly two
 places: ``read()`` returns a Spark DataFrame for external consumers, and
-``record_buckets`` collects a caller-supplied per-bucket aggregate —
-which is real data work, not bookkeeping.
+``changed_buckets`` collects a caller-supplied per-bucket fingerprint
+aggregate — which is real data work, not bookkeeping.
 
 Resume protocol per stage:
   1. work is split into deterministic buckets (``pmod(xxhash64(keys), B)``);
@@ -52,7 +52,6 @@ _PA_SCHEMA = pa.schema(
         ("bucket", pa.int32()),
         ("rows_in", pa.int64()),
         ("rows_out", pa.int64()),
-        ("content_sha_xor", pa.string()),
         ("input_fp", pa.string()),
         ("status", pa.string()),
         ("duration_ms", pa.int64()),
@@ -78,6 +77,8 @@ class LineageStore:
         return sorted(glob.glob(os.path.join(self.path, "*.parquet")))
 
     def _read_table(self) -> pa.Table:
+        """The whole table; files of older layouts (with columns since
+        dropped, e.g. ``content_sha_xor``) read as the current one."""
         self._recover()
         files = self._files() if os.path.exists(self.path) else []
         if not files:
@@ -203,19 +204,12 @@ class LineageStore:
     def record_buckets(
         self,
         stage: str,
-        per_bucket,
+        per_bucket: list[dict],
         duration_ms: int,
     ) -> None:
-        """Append one ``done`` row per bucket.
-
-        ``per_bucket``: a Spark DataFrame with columns (bucket, rows_in,
-        rows_out, content_sha_xor[, input_fp]) — collected here, O(buckets)
-        rows; the aggregation producing it is the caller's (distributed)
-        data work — or an equally-shaped list of dicts for stats the
-        caller already holds driver-side (footer counts, stage markers).
-        """
-        if isinstance(per_bucket, DataFrame):
-            per_bucket = [r.asDict() for r in per_bucket.collect()]
+        """Append one ``done`` row per bucket of ``per_bucket``: dicts of
+        (bucket, rows_in, rows_out[, input_fp]) the caller holds
+        driver-side (footer counts, source stats, stage markers)."""
         self._append(
             [
                 {
@@ -223,7 +217,6 @@ class LineageStore:
                     "bucket": int(r["bucket"]),
                     "rows_in": int(r["rows_in"]),
                     "rows_out": int(r["rows_out"]),
-                    "content_sha_xor": r.get("content_sha_xor"),
                     "input_fp": r.get("input_fp"),
                     "status": "done",
                     "duration_ms": int(duration_ms),
@@ -247,7 +240,6 @@ class LineageStore:
                     "bucket": 0,
                     "rows_in": rows_in,
                     "rows_out": rows_out,
-                    "content_sha_xor": None,
                     "input_fp": input_fp,
                 }
             ],

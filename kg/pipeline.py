@@ -5,16 +5,17 @@ sink DDL → vertices → edges, ``Migrator.cs:31-48``) becomes Spark stages
 (after an optional clean stage), each resumable through the lineage table
 in one of two shapes:
 
-  * bucketed (``_bucketed_stage``: clean_exact, extract) — the
-    corpus-sized stages.  Work buckets are ``pmod(xxhash64(keys), B)``
+  * bucketed (``_bucketed_stage``: clean_exact, extract, materialize) —
+    the corpus-sized stages.  Work buckets are ``pmod(xxhash64(keys), B)``
     and a rerun processes only the buckets not recorded done, mirroring
-    the reference's page high-water-mark (``Migrator.cs:80-81``).
-    Lineage is recorded from the source side, so a bucket whose files
-    yield no output still completes; output row counts come from
-    parquet footers.  materialize is bucketed too, per element kind
-    (nodes AND edges, the reference's per-page checkpoints for both
-    kinds, ``Migrator.cs:80-81,129-130``), with its two writes run
-    concurrently.
+    the reference's page high-water-mark (``Migrator.cs:80-81``).  A
+    stage may write several tables, one lineage stage each: materialize
+    writes nodes AND edges concurrently (the reference's per-page
+    checkpoints for both element kinds, ``Migrator.cs:80-81,129-130``).
+    A bucket is pending unless it is recorded done AND its table exists,
+    so a lost table is rebuilt, and every pending bucket is recorded,
+    so a bucket with no source rows or no output still completes;
+    output row counts come from parquet footers.
   * atomic (``_atomic_stage``: clean_minhash, link, canonicalize) —
     inputs are vocabulary- or output-sized, or (near-dup pairs) cross
     buckets by construction.  The stage is skipped only when it is
@@ -51,6 +52,7 @@ SURVEY.md §4 watch list.
 
 from __future__ import annotations
 
+import functools
 import glob
 import os
 import shutil
@@ -183,26 +185,50 @@ def _write_buckets(
     _write(_only(df, col, buckets, n), path, [col], buckets=n)
 
 
+# one table a bucketed stage writes: (lineage stage, path, bucket column,
+# frame), where ``frame(pending)`` returns its rows for the pending buckets
+_Output = tuple[str, str, str, Callable[[set[int]], DataFrame]]
+
+# ``_fingerprint`` over no rows: recorded for a pending bucket without
+# source rows, so a file added to it later reads as a change
+_EMPTY_FP = "0"
+
+
 def _bucketed_stage(
     lineage: LineageStore,
-    stage: str,
-    src: DataFrame,
-    col: str,
-    path: str,
+    event: str,
+    outputs: list[_Output],
     n: int,
-    build: Callable[[DataFrame], DataFrame],
-    detect_changes: bool,
+    src: DataFrame | None = None,
+    detect_changes: bool = False,
 ) -> None:
     """Bucket-level resume of a corpus-sized stage (module docstring).
 
-    ``src`` carries the work bucket in ``col``; ``build`` maps pending
-    source rows to output rows carrying the same bucket column.  Under
-    ``detect_changes``, done buckets whose recorded input fingerprint
-    differs from the current one are redone, and fingerprints are
-    recorded; off, the source-side stats stay a narrow (repo, path)
-    scan."""
-    done = lineage.completed_buckets(stage)
-    if detect_changes and done:
+    A bucket of an output is pending unless it is recorded done AND the
+    output table exists (rows of a lost table are dropped first); the
+    stage is skipped iff no output has a pending bucket.  Each output's
+    pending buckets are cleared and rewritten from ``frame(pending)``
+    (called on the calling thread, only for an output with pending
+    buckets; ``_write_buckets`` filters it to them), the first output's
+    write on the calling thread and the rest on a pool.  Then lineage
+    downstream of the last output is dropped and EVERY pending bucket of
+    every output is recorded done, ``rows_out`` from the parquet
+    footers.
+
+    ``src`` is the bucketed source of a one-output stage, bucketed on the
+    output's column.  It adds a stats job, run on the pool beside the
+    write, that records ``rows_in`` (0 for a pending bucket without
+    source rows).  Under ``detect_changes`` done buckets whose recorded
+    input fingerprint differs from the current one are redone, and
+    fingerprints are recorded; off, the stats stay a narrow (repo, path)
+    scan.  Without ``src``, ``rows_in`` is -1."""
+    done = []
+    for stage, path, _, _ in outputs:
+        if not os.path.exists(path):
+            lineage.invalidate_stages(stage)
+        done.append(lineage.completed_buckets(stage))
+    stage, _, col, _ = outputs[0]
+    if src is not None and detect_changes and done[0]:
         changed = lineage.changed_buckets(
             stage,
             src.groupBy(F.col(col).alias("bucket")).agg(
@@ -211,30 +237,49 @@ def _bucketed_stage(
         )
         if changed:
             lineage.invalidate_buckets(stage, changed)
-            done -= changed
+            done[0] -= changed
             log_event("changed_buckets_invalidated", stage=stage,
                       buckets=sorted(changed))
-    pending = set(range(n)) - done
-    pending_src = _only(src, col, pending, n)
-    # one early-terminating probe skips a rerun with nothing pending
-    if done and not pending_src.limit(1).count():
-        log_event("stage_skipped", stage=stage, done_buckets=len(done))
+    pending = [set(range(n)) - d for d in done]
+    if not any(pending):
+        log_event("stage_skipped", stage=event)
         return
-    log_event("stage_start", stage=stage, done_buckets=len(done))
+    log_event("stage_start", stage=event, pending_buckets={
+        o[0]: len(p) for o, p in zip(outputs, pending)
+    })
     stats = [F.count("*").alias("rows_in")]
     if detect_changes:
         stats.append(_fingerprint("repo", "path", "content").alias("input_fp"))
-    with StageTimer() as t, ThreadPoolExecutor(max_workers=1) as pool:
-        # the stats job reads only the source: running it concurrently
-        # with the write fills the write's barrier and commit-tail gaps
-        stats_job = pool.submit(
-            pending_src.groupBy(F.col(col).alias("bucket")).agg(*stats).collect
-        )
-        _write_buckets(build(pending_src), path, col, pending, n)
-        rows = [r.asDict() for r in stats_job.result()]
-    lineage.invalidate_stages(*_downstream(stage))
-    lineage.record_buckets(stage, _footer_stats(path, col, rows), t.ms)
-    log_event("stage_done", stage=stage, duration_ms=t.ms)
+    counted = {}
+    with StageTimer() as t, ThreadPoolExecutor(len(outputs)) as pool:
+        # the stats job reads only the source, and the outputs share no
+        # computation: running them concurrently fills one job's barrier
+        # and commit-tail gaps with another's tasks
+        if src is not None:
+            stats_job = pool.submit(
+                _only(src, col, pending[0], n)
+                .groupBy(F.col(col).alias("bucket")).agg(*stats).collect
+            )
+        writes = [
+            (frame(p), path, c, p)
+            for (_, path, c, frame), p in zip(outputs, pending) if p
+        ]
+        futs = [pool.submit(_write_buckets, *w, n) for w in writes[1:]]
+        _write_buckets(*writes[0], n)
+        for f in futs:
+            f.result()
+        if src is not None:
+            counted = {r["bucket"]: r.asDict() for r in stats_job.result()}
+    lineage.invalidate_stages(*_downstream(outputs[-1][0]))
+    blank = {
+        "rows_in": -1 if src is None else 0,
+        "input_fp": _EMPTY_FP if detect_changes else None,
+    }
+    for (stage, path, c, _), p in zip(outputs, pending):
+        if p:
+            rows = [counted.get(b, {"bucket": b, **blank}) for b in sorted(p)]
+            lineage.record_buckets(stage, _footer_stats(path, c, rows), t.ms)
+    log_event("stage_done", stage=event, duration_ms=t.ms)
 
 
 def _atomic_stage(
@@ -335,8 +380,10 @@ def _run_clean(
     )
     if dedup == "exact":
         _bucketed_stage(
-            lineage, "clean_exact", src, "cbucket", clean_path, b,
-            _dedup_exact_keep_first, detect_changes,
+            lineage, "clean_exact",
+            [("clean_exact", clean_path, "cbucket", lambda p:
+              _dedup_exact_keep_first(_only(src, "cbucket", p, b)))],
+            b, src, detect_changes,
         )
     else:
         from kg.ops.dedup import minhash_duplicates
@@ -360,63 +407,6 @@ def _run_clean(
             lineage, "clean_minhash", (clean_path,), near_dedup, input_fp
         )
     return spark.read.parquet(clean_path).drop("cbucket")
-
-
-def _run_materialize(
-    spark: SparkSession,
-    triples: DataFrame,
-    entity_map: DataFrame,
-    cfg: PipelineConfig,
-    lineage: LineageStore,
-) -> list[DataFrame]:
-    """Bucketed materialize, one lineage stage per element kind.  The
-    transform is recomputed (deterministic) but only pending buckets are
-    WRITTEN — the corpus-sized cost at 10^12 files.  The sink is
-    partitioned by a bucket of the partition key, the Spark mapping of
-    the reference's pk-partitioned container (CosmosDb.cs:125-132)."""
-    b = cfg.lineage_buckets
-    kinds = [
-        (cfg.table_path(k), f"materialize_{k}", pk)
-        for k, pk in (("nodes", "partition_key"), ("edges", "out_pk"))
-    ]
-    pending = [
-        set(range(b))
-        - (lineage.completed_buckets(stage) if os.path.exists(path) else set())
-        for path, stage, _ in kinds
-    ]
-    if not any(pending):
-        log_event("stage_skipped", stage="materialize")
-    else:
-        log_event(
-            "stage_start", stage="materialize",
-            pending_node_buckets=len(pending[0]),
-            pending_edge_buckets=len(pending[1]),
-        )
-        with StageTimer() as t, ThreadPoolExecutor(max_workers=2) as pool:
-            # nodes (three aggregations) and edges (projections) share no
-            # computation: writing them concurrently fills one kind's
-            # shuffle barriers and commit tails with the other's tasks
-            futs = [
-                pool.submit(
-                    _write_buckets,
-                    df.withColumn("pk_bucket", bucket_col(pk, n_buckets=b)),
-                    path, "pk_bucket", pend, b,
-                )
-                for df, (path, _, pk), pend in zip(
-                    run_materialize(triples, entity_map, cfg), kinds, pending
-                )
-                if pend
-            ]
-            for f in futs:
-                f.result()
-        for (path, stage, _), pend in zip(kinds, pending):
-            if pend:
-                rows = [{"bucket": x, "rows_in": -1} for x in sorted(pend)]
-                lineage.record_buckets(
-                    stage, _footer_stats(path, "pk_bucket", rows), t.ms
-                )
-        log_event("stage_done", stage="materialize", duration_ms=t.ms)
-    return [spark.read.parquet(p).drop("pk_bucket") for p, _, _ in kinds]
 
 
 def run_pipeline(
@@ -450,13 +440,14 @@ def run_pipeline(
     b = cfg.lineage_buckets
     triples_path = cfg.table_path("triples")
     bucket = bucket_col("repo", "path", n_buckets=b)
+    src = source_files.withColumn("bucket", bucket)
     _bucketed_stage(
-        lineage, "extract", source_files.withColumn("bucket", bucket),
-        "bucket", triples_path, b,
-        lambda pending: run_extract(
-            pending.drop("bucket"), engine=cfg.extract_engine
-        ).withColumn("bucket", bucket),
-        detect_changes,
+        lineage, "extract",
+        [("extract", triples_path, "bucket", lambda p: run_extract(
+            _only(src, "bucket", p, b).drop("bucket"),
+            engine=cfg.extract_engine,
+        ).withColumn("bucket", bucket))],
+        b, src, detect_changes,
     )
     triples = spark.read.parquet(triples_path).drop("bucket")
 
@@ -485,7 +476,29 @@ def run_pipeline(
     )
     entity_map = spark.read.parquet(emap_path)
 
-    nodes, edges = _run_materialize(spark, triples, entity_map, cfg, lineage)
+    # one lineage stage per element kind, the sink partitioned by a bucket
+    # of the partition key (the reference's pk-partitioned container,
+    # CosmosDb.cs:125-132): the transform is recomputed (deterministic),
+    # but only pending buckets are WRITTEN, the corpus-sized cost.  It is
+    # planned once, and only when a bucket is pending (planning alone took
+    # 0.55-1.0 s for the 707-file benchmark corpus on a 4-core host)
+    docs = functools.cache(lambda: run_materialize(triples, entity_map, cfg))
+    kinds = (("nodes", "partition_key"), ("edges", "out_pk"))
+    _bucketed_stage(
+        lineage, "materialize",
+        [
+            (f"materialize_{k}", cfg.table_path(k), "pk_bucket",
+             lambda _, i=i, pk=pk: docs()[i].withColumn(
+                 "pk_bucket", bucket_col(pk, n_buckets=b)
+             ))
+            for i, (k, pk) in enumerate(kinds)
+        ],
+        b,
+    )
+    nodes, edges = (
+        spark.read.parquet(cfg.table_path(k)).drop("pk_bucket")
+        for k, _ in kinds
+    )
     return {
         "triples": triples,
         "mentions": mentions,

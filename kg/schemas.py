@@ -128,7 +128,6 @@ LINEAGE = T.StructType(
         T.StructField("bucket", T.IntegerType(), False),
         T.StructField("rows_in", T.LongType(), False),
         T.StructField("rows_out", T.LongType(), False),
-        T.StructField("content_sha_xor", T.StringType(), True),
         T.StructField("input_fp", T.StringType(), True),
         T.StructField("status", T.StringType(), False),
         T.StructField("duration_ms", T.LongType(), False),

@@ -53,14 +53,31 @@ def plain_build(spark, tmp_path_factory):
 
 
 def _seeded_store(spark, tmp_path_factory) -> LineageStore:
+    """A store holding four done extract buckets, written in the legacy
+    8-column layout (with the since-dropped ``content_sha_xor``): the
+    tests that use it also pin that old tables stay readable."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     store = LineageStore(
         spark, str(tmp_path_factory.mktemp("lineage_unit")) + "/lineage"
     )
-    per_bucket = spark.createDataFrame(
-        [(b, 1, 1, None) for b in range(4)],
-        "bucket int, rows_in long, rows_out long, content_sha_xor string",
+    os.makedirs(store.path)
+    legacy = pa.table(
+        {
+            "stage": pa.array(["extract"] * 4, pa.string()),
+            "bucket": pa.array(range(4), pa.int32()),
+            "rows_in": pa.array([1] * 4, pa.int64()),
+            "rows_out": pa.array([1] * 4, pa.int64()),
+            "content_sha_xor": pa.array(["1:0"] * 4, pa.string()),
+            "input_fp": pa.array([None] * 4, pa.string()),
+            "status": pa.array(["done"] * 4, pa.string()),
+            "duration_ms": pa.array([0] * 4, pa.int64()),
+        }
     )
-    store.record_buckets("extract", per_bucket, 0)
+    pq.write_table(legacy, os.path.join(store.path, "part-00000.parquet"))
     return store
 
 
@@ -332,10 +349,14 @@ def test_default_run_skips_fingerprint_then_detect_changes_recovers(
     assert len(before) == len(store.read().toPandas())
 
 
-def test_zero_output_bucket_is_marked_done(spark, tmp_path_factory):
-    """Lineage is recorded from the source side: a bucket whose files
-    yield no triples must still be marked done (else real corpora with
-    unknown-language files re-extract it on every rerun)."""
+def test_zero_output_bucket_is_marked_done(spark, tmp_path_factory, caplog):
+    """Every pending bucket is recorded: a bucket whose files yield no
+    triples, and one with no files at all, must still be marked done
+    (else real corpora with unknown-language files re-extract it on
+    every rerun), so a plain rerun skips extract."""
+    import json
+    import logging
+
     from kg.lineage import bucket_col
 
     cfg = PipelineConfig(
@@ -356,7 +377,8 @@ def test_zero_output_bucket_is_marked_done(spark, tmp_path_factory):
         .b
     )
     store = LineageStore(spark, cfg.table_path("lineage"))
-    assert b0 in store.completed_buckets("extract")
+    # 7 files over 64 buckets: most buckets have no source rows
+    assert store.completed_buckets("extract") == set(range(64))
     row = (
         store.read()
         .filter((F.col("stage") == "extract") & (F.col("bucket") == b0))
@@ -366,9 +388,55 @@ def test_zero_output_bucket_is_marked_done(spark, tmp_path_factory):
     # rerun: nothing pending, lineage unchanged (the short-circuit holds
     # even though the bucket produced no triples)
     n1 = store.read().count()
-    run_pipeline(spark, src, cfg)
+    with caplog.at_level(logging.INFO, logger="kg"):
+        run_pipeline(spark, src, cfg)
+    events = [
+        json.loads(r.getMessage()) for r in caplog.records if r.name == "kg"
+    ]
+    assert {"event": "stage_skipped", "stage": "extract"} in events
     assert store.read().count() == n1
     assert out["triples"].filter(F.col("path") == "src/empty.py").count() == 0
+
+
+def test_file_added_to_empty_bucket_is_extracted(spark, tmp_path_factory):
+    """A detect_changes build records every bucket with a fingerprint,
+    a bucket without source rows with the empty one: a file added to
+    such a bucket reads as a change, so the next detect_changes run
+    extracts it and the graph equals a restart build."""
+    from kg.datagen import make_file
+    from kg.schemas import SOURCE_FILES
+
+    bucket = bucket_col("repo", "path", n_buckets=64)
+    files = [make_file(i) for i in range(60)]
+    src = spark.createDataFrame(files[:7], SOURCE_FILES)
+    cfg = PipelineConfig(
+        warehouse=str(tmp_path_factory.mktemp("empty_fp")), lineage_buckets=64
+    )
+    run_pipeline(spark, src, cfg, restart=True, detect_changes=True)
+    store = LineageStore(spark, cfg.table_path("lineage"))
+    ext = store.read().filter("stage = 'extract'")
+    assert ext.count() == 64
+    assert ext.filter("input_fp IS NULL").count() == 0
+
+    used = [r.b for r in src.select(bucket.alias("b")).distinct().collect()]
+    new = (
+        spark.createDataFrame(files[7:], SOURCE_FILES)
+        .filter((F.col("lang") == "python") & ~bucket.isin(used))
+        .orderBy("repo", "path")
+        .first()
+    )
+    src2 = spark.createDataFrame(files[:7] + [new.asDict()], SOURCE_FILES)
+    golden = _snapshot(
+        run_pipeline(
+            spark, src2, _cfg(tmp_path_factory, "empty_fp_g"), restart=True
+        )
+    )
+    out = run_pipeline(spark, src2, cfg, detect_changes=True)
+    assert out["triples"].filter(F.col("path") == new.path).count() > 0
+    assert _snapshot(out) == golden
+    ext = store.read().filter("stage = 'extract'")
+    assert ext.count() == 64
+    assert ext.filter("input_fp IS NULL").count() == 0
 
 
 def test_materialize_resume_rewrites_only_missing_buckets(
@@ -410,13 +478,18 @@ def test_materialize_resume_rewrites_only_missing_buckets(
 
 
 @pytest.mark.parametrize(
-    "table, stage", [("mentions", "link"), ("entity_map", "canonicalize")]
+    "table, stage",
+    [
+        ("mentions", "link"),
+        ("entity_map", "canonicalize"),
+        ("triples", "extract"),
+    ],
 )
 def test_missing_output_rebuilds_recorded_stage(
     spark, tmp_path_factory, caplog, plain_build, table, stage
 ):
-    """Stage-level resume checks the outputs, not just lineage: a table
-    deleted while its stage still reads done is rebuilt by a plain
+    """Resume checks the outputs, not just lineage: a table deleted while
+    its stage (atomic or bucketed) still reads done is rebuilt by a plain
     rerun, and the graph equals the first run's."""
     import json
     import logging
@@ -426,6 +499,7 @@ def test_missing_output_rebuilds_recorded_stage(
     warehouse, golden = plain_build
     cfg = _copy(warehouse, tmp_path_factory, f"lost_{table}")
     store = LineageStore(spark, cfg.table_path("lineage"))
+    rows = store.read().filter(F.col("stage") == stage).count()
     shutil.rmtree(cfg.table_path(table))
     assert store.stage_done(stage)
 
@@ -434,9 +508,15 @@ def test_missing_output_rebuilds_recorded_stage(
     events = [
         json.loads(r.getMessage()) for r in caplog.records if r.name == "kg"
     ]
-    assert {"event": "stage_start", "stage": stage} in events
+    # bucketed stage_start events also carry pending counts
+    assert any(
+        e["event"] == "stage_start" and e.get("stage") == stage
+        for e in events
+    )
     assert os.path.exists(cfg.table_path(table))
     assert store.stage_done(stage)
+    # the lost table's rows were replaced, not appended to
+    assert store.read().filter(F.col("stage") == stage).count() == rows
     assert _snapshot(out) == golden
 
 
