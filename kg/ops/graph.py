@@ -459,7 +459,12 @@ def _pagerank_ranked_edges(
         else e.groupBy("src").agg(F.count("*").alias("outd"))
     )
     while _PREV_RANKED_CACHE:
-        _PREV_RANKED_CACHE.pop().unpersist()
+        try:
+            _PREV_RANKED_CACHE.pop().unpersist()
+        except Exception:
+            # best-effort: a frame of a since-stopped session cannot be
+            # unpersisted (its cache died with it); never fail this call
+            pass
     n_shuffle = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     ranked = (
         e.join(outd, "src")
@@ -467,7 +472,9 @@ def _pagerank_ranked_edges(
         .sortWithinPartitions("src")
         .persist()
     )
-    ranked.count()  # materialize now (this runs on the overlap thread)
+    # materialize now, on the calling thread (under pagerank() the
+    # encode's vocab job runs meanwhile on _encode_with_overlap's pool)
+    ranked.count()
     _PREV_RANKED_CACHE.append(ranked)
     return ranked, contrib_expr
 

@@ -76,6 +76,43 @@ def md5_base(col: Column) -> Column:
 _SIG_CHUNK_TOKENS = 128 * 1024
 
 
+def minhash_fold(
+    rows: list, perms: int, chunk_tokens: int = _SIG_CHUNK_TOKENS
+):
+    """``(len(rows), perms)`` int64 MinHash signatures of non-empty int64
+    base-hash arrays: ``sig[i, p] = min((a_p·h + b_p) mod PRIME)`` over
+    the hashes ``h`` of ``rows[i]``.  The one definition of the signature
+    arithmetic, shared by the Arrow UDF below and the driver-side link
+    (``kg.link.stage.driver_match_pairs``).
+
+    Exact int64: h < PRIME and a_p < PRIME keep a_p·h + b_p < 2^63, so
+    numpy computes the same integers the JVM does.  ``perms`` fused
+    vectorized ops over the concatenated hash buffer + one
+    ``minimum.reduceat`` per chunk of ≤ ``chunk_tokens`` hashes (a row
+    longer than that is one chunk)."""
+    import numpy as np
+
+    params = [_affine_params(i) for i in range(perms)]
+    a_vec = np.array([p[0] for p in params], dtype=np.int64)
+    b_vec = np.array([p[1] for p in params], dtype=np.int64)
+    n = len(rows)
+    lens = np.fromiter((len(r) for r in rows), dtype=np.int64, count=n)
+    sigs = np.empty((n, perms), dtype=np.int64)
+    lo = 0
+    while lo < n:
+        hi, tok = lo, 0
+        while hi < n and (tok == 0 or tok + lens[hi] <= chunk_tokens):
+            tok += lens[hi]
+            hi += 1
+        flat = np.concatenate(rows[lo:hi])
+        vals = (flat[:, None] * a_vec + b_vec) % _PRIME
+        starts = np.zeros(hi - lo, dtype=np.int64)
+        np.cumsum(lens[lo:hi][:-1], out=starts[1:])
+        sigs[lo:hi] = np.minimum.reduceat(vals, starts, axis=0)
+        lo = hi
+    return sigs
+
+
 def _minhash_sig_arrow(
     hashed: DataFrame,
     id_col: str,
@@ -84,16 +121,14 @@ def _minhash_sig_arrow(
     chunk_tokens: int = _SIG_CHUNK_TOKENS,
 ) -> DataFrame:
     """(id, group…, _hs array<long>) → (id, group…, sig array<long>):
-    all ``perms`` affine-permutation minima in one vectorized numpy pass.
+    all ``perms`` affine-permutation minima in one vectorized numpy pass
+    (``minhash_fold``).
 
-    Bit-identical to the expr engine (equivalence-tested): every value
-    is ``min((a_i·h + b_i) mod PRIME)`` in exact int64 — h < PRIME and
-    a_i < PRIME keep a_i·h + b_i < 2^63, so numpy int64 computes the
-    same integers the JVM does.  The expr form pays ~perms × |shingles|
-    *interpreted lambda invocations* per document (the dominant term of
-    the minhash family at bench scale, guide §4.2); here the same
-    arithmetic is ``perms`` fused vectorized ops over the concatenated
-    hash buffer + one ``minimum.reduceat`` per permutation.
+    Bit-identical to the expr engine (equivalence-tested).  The expr
+    form pays ~perms × |shingles| *interpreted lambda invocations* per
+    document (the dominant term of the minhash family at bench scale,
+    guide §4.2); here the same arithmetic is ``perms`` fused vectorized
+    ops per batch.
 
     Rows with an empty (or null) hash array are dropped HERE, inside the
     Python barrier, not by a JVM filter: a ``where(size(...) >= 1)``
@@ -106,9 +141,6 @@ def _minhash_sig_arrow(
     once."""
     import numpy as np
 
-    params = [_affine_params(i) for i in range(perms)]
-    a_vec = np.array([p[0] for p in params], dtype=np.int64)
-    b_vec = np.array([p[1] for p in params], dtype=np.int64)
     fields = ", ".join(
         f"{c} {hashed.schema[c].dataType.simpleString()}"
         for c in (id_col, *group_cols)
@@ -119,37 +151,18 @@ def _minhash_sig_arrow(
         import pandas as pd
 
         for pdf in batches:
-            rows = [
-                np.asarray(h, dtype=np.int64)
-                for h in pdf["_hs"]
-                if h is not None and len(h)
-            ]
             keep = np.fromiter(
                 (h is not None and len(h) > 0 for h in pdf["_hs"]),
                 dtype=bool,
                 count=len(pdf),
             )
-            n = len(rows)
-            if not n:
+            if not keep.any():
                 continue
-            lens = np.fromiter(
-                (len(r) for r in rows), dtype=np.int64, count=n
-            )
-            sigs = np.empty((n, perms), dtype=np.int64)
-            lo = 0
-            while lo < n:
-                hi, tok = lo, 0
-                while hi < n and (tok == 0 or tok + lens[hi] <= chunk_tokens):
-                    tok += lens[hi]
-                    hi += 1
-                flat = np.concatenate(rows[lo:hi])
-                vals = (flat[:, None] * a_vec + b_vec) % _PRIME
-                starts = np.zeros(hi - lo, dtype=np.int64)
-                np.cumsum(lens[lo:hi][:-1], out=starts[1:])
-                sigs[lo:hi] = np.minimum.reduceat(vals, starts, axis=0)
-                lo = hi
+            rows = [
+                np.asarray(h, dtype=np.int64) for h in pdf["_hs"][keep]
+            ]
             out = {c: pdf[c][keep] for c in (id_col, *group_cols)}
-            out["sig"] = list(sigs)
+            out["sig"] = list(minhash_fold(rows, perms, chunk_tokens))
             yield pd.DataFrame(out)
 
     return hashed.select(id_col, *group_cols, "_hs").mapInPandas(

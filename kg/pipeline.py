@@ -20,7 +20,10 @@ in one of two shapes:
     inputs are vocabulary- or output-sized, or (near-dup pairs) cross
     buckets by construction.  The stage is skipped only when it is
     recorded done and its outputs exist; otherwise its whole output is
-    rebuilt and overwritten.
+    rebuilt and overwritten.  Link and canonicalize run on the driver
+    while the mention vocabulary fits the scorer's broadcast budget
+    (``_vocab_regime``), as Spark jobs above it; both paths write the
+    same rows.
 
 Bucketed stages order a write as: data durable → downstream lineage
 dropped → buckets recorded done.  Atomic stages drop their own and their
@@ -68,11 +71,18 @@ from pyspark.sql import (
     functions as F,
 )
 
-from kg.canonicalize import run_canonicalize
+from kg import hints
+from kg.canonicalize import driver_canonicalize, run_canonicalize
 from kg.conf import PipelineConfig
 from kg.extract import run_extract
 from kg.lineage import LineageStore, StageTimer, bucket_col
-from kg.link import add_shingles, match_pairs, mentions_from_triples
+from kg.link import (
+    add_shingles,
+    driver_match_pairs,
+    match_pairs,
+    mentions_from_triples,
+)
+from kg.link.stage import _MENTION_ROW_BYTES
 from kg.log import log_event
 from kg.materialize import run_materialize
 
@@ -123,11 +133,30 @@ def _footer_stats(path: str, col: str, rows: list[dict]) -> list[dict]:
     paths only (``PipelineConfig`` rejects ``scheme://`` warehouses)."""
     for r in rows:
         bucket_dir = os.path.join(path, f"{col}={r['bucket']}")
-        r["rows_out"] = sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(os.path.join(bucket_dir, "*.parquet"))
-        )
+        r["rows_out"] = _footer_rows(bucket_dir)
     return rows
+
+
+def _footer_rows(path: str) -> int:
+    """Rows in the parquet files directly under ``path``, summed from
+    their footers (0 for an absent dir): no Spark job."""
+    return sum(
+        pq.ParquetFile(f).metadata.num_rows
+        for f in glob.glob(os.path.join(path, "*.parquet"))
+    )
+
+
+def _vocab_regime(mentions_path: str) -> dict:
+    """Where link and canonicalize run: ``{"path": "driver" | "spark",
+    "mentions": n}``.  The driver path runs iff the ``n`` mentions fit
+    the scorer's broadcast budget (``n × _MENTION_ROW_BYTES ≤
+    kg.hints.DEFAULT_MAX_BYTES``), i.e. exactly when ``score_pairs``
+    would broadcast the whole embedded vocabulary to every executor
+    anyway.  ``n`` comes from the durable mentions table's footers, so
+    canonicalize takes link's path also when link was skipped."""
+    n = _footer_rows(mentions_path)
+    fits = n * _MENTION_ROW_BYTES <= hints.DEFAULT_MAX_BYTES
+    return {"path": "driver" if fits else "spark", "mentions": n}
 
 
 def _only(df: DataFrame, col: str, buckets: set[int], n: int) -> DataFrame:
@@ -286,7 +315,7 @@ def _atomic_stage(
     lineage: LineageStore,
     stage: str,
     outputs: tuple[str, ...],
-    build: Callable[[], None],
+    build: Callable[[], dict | None],
     input_fp: str | None = None,
 ) -> None:
     """Stage-level resume (module docstring).  Skipped only when recorded
@@ -295,7 +324,8 @@ def _atomic_stage(
     stage's own and downstream lineage is dropped first, so a crash
     mid-rebuild leaves it unrecorded; then the outputs are deleted and
     ``build`` writes them whole — a partitioned dynamic overwrite alone
-    would keep partitions the new output lacks.  Staleness needs no check
+    would keep partitions the new output lacks.  Fields ``build``
+    returns are logged on ``stage_done``.  Staleness needs no check
     of its own: an upstream stage that wrote new output has already
     dropped this stage's lineage."""
     if lineage.stage_done(stage) and all(map(os.path.exists, outputs)):
@@ -308,9 +338,9 @@ def _atomic_stage(
     with StageTimer() as t:
         for p in outputs:
             shutil.rmtree(p, ignore_errors=True)
-        build()
+        fields = build() or {}
     lineage.record_stage(stage, -1, -1, t.ms, input_fp=input_fp)
-    log_event("stage_done", stage=stage, duration_ms=t.ms)
+    log_event("stage_done", stage=stage, duration_ms=t.ms, **fields)
 
 
 def _dedup_exact_keep_first(df: DataFrame) -> DataFrame:
@@ -463,17 +493,29 @@ def run_pipeline(
             mentions_path,
         )
         mentions = add_shingles(spark.read.parquet(mentions_path), cfg)
-        _write(match_pairs(mentions, cfg), matches_path)
+        regime = _vocab_regime(mentions_path)
+        matcher = (
+            driver_match_pairs if regime["path"] == "driver" else match_pairs
+        )
+        _write(matcher(mentions, cfg), matches_path)
+        return {"regime": regime}
 
     _atomic_stage(lineage, "link", (mentions_path, matches_path), link)
     mentions = spark.read.parquet(mentions_path)
     matches = spark.read.parquet(matches_path)
 
     emap_path = cfg.table_path("entity_map")
-    _atomic_stage(
-        lineage, "canonicalize", (emap_path,),
-        lambda: _write(run_canonicalize(mentions, matches), emap_path),
-    )
+
+    def canonicalize():
+        regime = _vocab_regime(mentions_path)
+        canon = (
+            driver_canonicalize if regime["path"] == "driver"
+            else run_canonicalize
+        )
+        _write(canon(mentions, matches), emap_path)
+        return {"regime": regime}
+
+    _atomic_stage(lineage, "canonicalize", (emap_path,), canonicalize)
     entity_map = spark.read.parquet(emap_path)
 
     # one lineage stage per element kind, the sink partitioned by a bucket

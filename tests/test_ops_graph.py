@@ -171,6 +171,26 @@ def test_pagerank_ranked_edges_cache_is_single_and_recomputed(spark):
     # check above is what proves the rebuild.)
 
 
+def test_pagerank_survives_a_cache_entry_that_cannot_unpersist(spark):
+    """The previous call's cache entry is dropped best-effort: one left
+    by a since-stopped session (stood in for by a stub whose
+    ``unpersist`` raises) must not fail the next pagerank."""
+    from kg.ops.graph import _PREV_RANKED_CACHE
+
+    class _DeadFrame:
+        def unpersist(self):
+            raise RuntimeError("session stopped")
+
+    e = spark.createDataFrame(
+        [("a", "b"), ("a", "c"), ("b", "c")], "out_id string, in_id string"
+    )
+    _PREV_RANKED_CACHE.append(_DeadFrame())
+    r = {r.id: r.rank_fp for r in pagerank(e, iters=2).collect()}
+    assert r == {"a": 150000, "b": 213750, "c": 702500}
+    assert len(_PREV_RANKED_CACHE) == 1
+    assert not isinstance(_PREV_RANKED_CACHE[0], _DeadFrame)
+
+
 def test_personalized_pagerank_hand_check_and_global_equivalence(spark):
     from kg.ops import personalized_pagerank
 

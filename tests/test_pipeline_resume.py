@@ -520,6 +520,37 @@ def test_missing_output_rebuilds_recorded_stage(
     assert _snapshot(out) == golden
 
 
+def test_over_budget_vocabulary_takes_the_spark_path(
+    spark, tmp_path_factory, caplog, plain_build, monkeypatch
+):
+    """With the broadcast budget forced to 0, link and canonicalize take
+    the Spark path, and every table equals the driver-path build's
+    (``plain_build``; its vocabulary is far under the budget)."""
+    import json
+    import logging
+
+    from kg import hints
+
+    warehouse, golden = plain_build
+    first = PipelineConfig(warehouse=warehouse)
+    monkeypatch.setattr(hints, "DEFAULT_MAX_BYTES", 0)
+    cfg = _cfg(tmp_path_factory, "spark_path")
+    with caplog.at_level(logging.INFO, logger="kg"):
+        out = run_pipeline(spark, source_files_df(spark, N), cfg, restart=True)
+    events = [
+        json.loads(r.getMessage()) for r in caplog.records if r.name == "kg"
+    ]
+    regime = {"path": "spark", "mentions": out["mentions"].count()}
+    assert {
+        e["stage"]: e["regime"] for e in events
+        if e["event"] == "stage_done" and "regime" in e
+    } == {"link": regime, "canonicalize": regime}
+    for t in ("mentions", "matches", "entity_map"):
+        want = spark.read.parquet(first.table_path(t)).collect()
+        assert sorted(map(tuple, out[t].collect())) == sorted(map(tuple, want))
+    assert _snapshot(out) == golden
+
+
 def test_restart_truncates_everything(spark, tmp_path_factory):
     cfg = _cfg(tmp_path_factory, "restart")
     src = source_files_df(spark, 20)
