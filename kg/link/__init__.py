@@ -6,4 +6,5 @@ from kg.link.stage import (  # noqa: F401
     mentions_from_triples,
     run_link,
     score_pairs,
+    scorer_broadcasts,
 )

@@ -71,7 +71,6 @@ from pyspark.sql import (
     functions as F,
 )
 
-from kg import hints
 from kg.canonicalize import driver_canonicalize, run_canonicalize
 from kg.conf import PipelineConfig
 from kg.extract import run_extract
@@ -81,8 +80,8 @@ from kg.link import (
     driver_match_pairs,
     match_pairs,
     mentions_from_triples,
+    scorer_broadcasts,
 )
-from kg.link.stage import _MENTION_ROW_BYTES
 from kg.log import log_event
 from kg.materialize import run_materialize
 
@@ -148,15 +147,14 @@ def _footer_rows(path: str) -> int:
 
 def _vocab_regime(mentions_path: str) -> dict:
     """Where link and canonicalize run: ``{"path": "driver" | "spark",
-    "mentions": n}``.  The driver path runs iff the ``n`` mentions fit
-    the scorer's broadcast budget (``n × _MENTION_ROW_BYTES ≤
-    kg.hints.DEFAULT_MAX_BYTES``), i.e. exactly when ``score_pairs``
-    would broadcast the whole embedded vocabulary to every executor
-    anyway.  ``n`` comes from the durable mentions table's footers, so
-    canonicalize takes link's path also when link was skipped."""
+    "mentions": n}``.  The driver path runs iff ``score_pairs`` would
+    broadcast the whole embedded vocabulary of ``n`` mentions to every
+    executor anyway (``kg.link.scorer_broadcasts``).  ``n`` comes from
+    the durable mentions table's footers, so canonicalize takes link's
+    path also when link was skipped."""
     n = _footer_rows(mentions_path)
-    fits = n * _MENTION_ROW_BYTES <= hints.DEFAULT_MAX_BYTES
-    return {"path": "driver" if fits else "spark", "mentions": n}
+    path = "driver" if scorer_broadcasts(n) else "spark"
+    return {"path": path, "mentions": n}
 
 
 def _only(df: DataFrame, col: str, buckets: set[int], n: int) -> DataFrame:

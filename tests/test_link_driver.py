@@ -118,44 +118,27 @@ def test_driver_link_and_canonicalize_equal_spark(spark, vocab, tmp_path):
         assert not pairs
 
 
-def _regimes(caplog) -> dict:
-    """``{stage: regime}`` from the ``stage_done`` events of link and
-    canonicalize."""
-    import json
-
-    events = [json.loads(r.getMessage()) for r in caplog.records if r.name == "kg"]
-    return {
-        e["stage"]: e["regime"]
-        for e in events
-        if e["event"] == "stage_done" and "regime" in e
-    }
-
-
-def test_restart_build_entity_map_equals_pinned_golden(
-    spark, tmp_path_factory, caplog
-):
-    """A restart build over the 200-file corpus runs link and
-    canonicalize on the driver and reproduces the pinned entity_map."""
-    import logging
+def test_driver_entity_map_equals_pinned_golden(spark, tmp_path):
+    """The driver link and canonicalize over the 200-file corpus's
+    mentions reproduce the pinned entity_map (the extractor's triples
+    equal ``golden_triples(200)``: ``tests/test_goldens_pinned.py``)."""
     import os
 
     import pandas as pd
 
-    from kg.datagen import source_files_df
-    from kg.pipeline import run_pipeline
-
-    cfg = PipelineConfig(
-        warehouse=str(tmp_path_factory.mktemp("golden_200")), lineage_buckets=8
-    )
-    with caplog.at_level(logging.INFO, logger="kg"):
-        out = run_pipeline(spark, source_files_df(spark, 200), cfg, restart=True)
-    regime = {"path": "driver", "mentions": out["mentions"].count()}
-    assert _regimes(caplog) == {"link": regime, "canonicalize": regime}
+    mentions = mentions_from_triples(
+        spark.createDataFrame(
+            golden_triples(200)[["pred", "obj"]], "pred string, obj string"
+        ),
+        CFG,
+    ).localCheckpoint()
+    _write(driver_match_pairs(mentions, CFG), str(tmp_path / "matches"))
+    matches = spark.read.parquet(str(tmp_path / "matches"))
     pinned = pd.read_parquet(
         os.path.join(
             os.path.dirname(__file__), "goldens", "golden_entity_map_200.parquet"
         )
     )
     assert sorted(pinned.itertuples(index=False, name=None)) == _rows(
-        out["entity_map"]
+        driver_canonicalize(mentions, matches)
     )

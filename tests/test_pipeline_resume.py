@@ -3,6 +3,9 @@ processes only missing work, outputs byte-identical to a clean run."""
 
 from __future__ import annotations
 
+import contextlib
+import json
+import logging
 import shutil
 
 import pytest
@@ -42,14 +45,43 @@ def _copy(warehouse: str, tmp_path_factory, name) -> PipelineConfig:
     return cfg
 
 
+@contextlib.contextmanager
+def _kg_events():
+    """The ``kg`` log events emitted inside the block, as dicts."""
+    events: list[dict] = []
+    handler = logging.Handler(logging.INFO)
+    handler.emit = lambda r: events.append(json.loads(r.getMessage()))
+    logger = logging.getLogger("kg")
+    level = logger.level
+    logger.addHandler(handler)
+    logger.setLevel(logging.INFO)
+    try:
+        yield events
+    finally:
+        logger.removeHandler(handler)
+        logger.setLevel(level)
+
+
+def _regimes(events: list[dict]) -> dict:
+    """``{stage: regime}`` from the ``stage_done`` events that carry one
+    (link and canonicalize)."""
+    return {
+        e["stage"]: e["regime"]
+        for e in events
+        if e["event"] == "stage_done" and "regime" in e
+    }
+
+
 @pytest.fixture(scope="module")
 def plain_build(spark, tmp_path_factory):
     """Restart build of the N-file corpus in default mode (no input
-    fingerprints recorded), made once per module: (warehouse, snapshot).
-    Tests work on a ``_copy`` of the warehouse."""
+    fingerprints recorded), made once per module: (warehouse, snapshot,
+    the regimes its link and canonicalize logged).  Tests work on a
+    ``_copy`` of the warehouse."""
     cfg = _cfg(tmp_path_factory, "plain_build")
-    out = run_pipeline(spark, source_files_df(spark, N), cfg, restart=True)
-    return cfg.warehouse, _snapshot(out)
+    with _kg_events() as events:
+        out = run_pipeline(spark, source_files_df(spark, N), cfg, restart=True)
+    return cfg.warehouse, _snapshot(out), _regimes(events)
 
 
 def _seeded_store(spark, tmp_path_factory) -> LineageStore:
@@ -126,7 +158,7 @@ def test_lineage_partial_tmp_rolls_back(spark, tmp_path_factory):
 
 
 def test_rerun_is_idempotent(spark, tmp_path_factory, plain_build):
-    warehouse, snap1 = plain_build
+    warehouse, snap1, _ = plain_build
     cfg = _copy(warehouse, tmp_path_factory, "idem")
     src = source_files_df(spark, N)
     out2 = run_pipeline(spark, src, cfg)  # rerun, nothing to do
@@ -297,7 +329,7 @@ def test_crash_after_extract_recorded_still_rebuilds_downstream(
     import kg.pipeline as P
 
     src = source_files_df(spark, N)
-    warehouse, golden = plain_build
+    warehouse, golden, _ = plain_build
     cfg = _copy(warehouse, tmp_path_factory, "crash_ds")
 
     # run B: a detect_changes rerun (run A recorded no fingerprints, so
@@ -449,7 +481,7 @@ def test_materialize_resume_rewrites_only_missing_buckets(
     import os
 
     src = source_files_df(spark, N)
-    warehouse, golden = plain_build
+    warehouse, golden, _ = plain_build
     cfg = _copy(warehouse, tmp_path_factory, "mat_resume")
 
     store = LineageStore(spark, cfg.table_path("lineage"))
@@ -496,7 +528,7 @@ def test_missing_output_rebuilds_recorded_stage(
     import os
 
     src = source_files_df(spark, N)
-    warehouse, golden = plain_build
+    warehouse, golden, _ = plain_build
     cfg = _copy(warehouse, tmp_path_factory, f"lost_{table}")
     store = LineageStore(spark, cfg.table_path("lineage"))
     rows = store.read().filter(F.col("stage") == stage).count()
@@ -521,30 +553,27 @@ def test_missing_output_rebuilds_recorded_stage(
 
 
 def test_over_budget_vocabulary_takes_the_spark_path(
-    spark, tmp_path_factory, caplog, plain_build, monkeypatch
+    spark, tmp_path_factory, plain_build, monkeypatch
 ):
-    """With the broadcast budget forced to 0, link and canonicalize take
-    the Spark path, and every table equals the driver-path build's
-    (``plain_build``; its vocabulary is far under the budget)."""
-    import json
-    import logging
-
+    """``plain_build``, whose vocabulary is far under the broadcast
+    budget, ran link and canonicalize on the driver.  With the budget
+    forced to 0 they take the Spark path, and every table equals the
+    driver-path build's."""
     from kg import hints
 
-    warehouse, golden = plain_build
+    warehouse, golden, driver_regimes = plain_build
     first = PipelineConfig(warehouse=warehouse)
     monkeypatch.setattr(hints, "DEFAULT_MAX_BYTES", 0)
     cfg = _cfg(tmp_path_factory, "spark_path")
-    with caplog.at_level(logging.INFO, logger="kg"):
+    with _kg_events() as events:
         out = run_pipeline(spark, source_files_df(spark, N), cfg, restart=True)
-    events = [
-        json.loads(r.getMessage()) for r in caplog.records if r.name == "kg"
-    ]
-    regime = {"path": "spark", "mentions": out["mentions"].count()}
-    assert {
-        e["stage"]: e["regime"] for e in events
-        if e["event"] == "stage_done" and "regime" in e
-    } == {"link": regime, "canonicalize": regime}
+    n = out["mentions"].count()
+    assert driver_regimes == {
+        s: {"path": "driver", "mentions": n} for s in ("link", "canonicalize")
+    }
+    assert _regimes(events) == {
+        s: {"path": "spark", "mentions": n} for s in ("link", "canonicalize")
+    }
     for t in ("mentions", "matches", "entity_map"):
         want = spark.read.parquet(first.table_path(t)).collect()
         assert sorted(map(tuple, out[t].collect())) == sorted(map(tuple, want))
