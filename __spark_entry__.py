@@ -3728,13 +3728,18 @@ def _kg_outputs(
     spark: SparkSession, upto: str = "materialize"
 ) -> dict[str, DataFrame]:
     """Build the pipeline ONLY up to the stage the caller needs:
-    link+canonicalize run eager actions (mention checkpoint + count, CC
-    fixpoint rounds), so q_kg_triples must not pay for them and
-    q_kg_entity_map must not pay for materialize."""
+    link+canonicalize run eager actions (mention checkpoint, the
+    vocabulary and match-edge collects), so q_kg_triples must not pay
+    for them and q_kg_entity_map must not pay for materialize.  Link and
+    canonicalize are the pipeline's own (``match_pairs``,
+    ``run_canonicalize``), so they take the path the pipeline takes for
+    this vocabulary: the driver one.  The mentions are checkpointed:
+    link's collect, the Spark link plan and canonicalize all read them,
+    and each read would otherwise rerun extract."""
     from kg.datagen import source_files_df
     from kg.extract import run_extract
     from kg.hints import exclude_generate_filter_inference
-    from kg.link import run_link
+    from kg.link import match_pairs, mentions_from_triples
     from kg.canonicalize import run_canonicalize
     from kg.materialize import run_materialize
 
@@ -3748,8 +3753,8 @@ def _kg_outputs(
     out: dict[str, DataFrame] = {"triples": triples}
     if upto == "extract":
         return out
-    mentions, matches = run_link(triples, cfg)
-    emap = run_canonicalize(mentions, matches)
+    mentions = mentions_from_triples(triples, cfg).localCheckpoint()
+    emap = run_canonicalize(mentions, match_pairs(mentions, cfg))
     out["entity_map"] = emap
     if upto == "canonicalize":
         return out

@@ -14,6 +14,11 @@ entity id — is stable across runs and cluster sizes.
 Catalyst cannot express iteration, so the loop lives driver-side with a
 ``localCheckpoint()`` per round to truncate the logical plan (SURVEY.md §4
 hard-parts watch list: unbounded plan growth otherwise blows up analysis).
+
+The one size decision of canonicalize lives here too: a graph of at most
+``driver_threshold`` edges (every match graph the benchmark builds) is
+resolved by a driver union-find over one bounded collect instead
+(``connected_components``).
 """
 
 from __future__ import annotations
@@ -55,10 +60,10 @@ def _small_star(e: DataFrame) -> DataFrame:
 
 
 def _driver_cc(rows) -> list[tuple[str, str]]:
-    """Union-find with min-root merging: the same min-member canonical
-    ids the star loop converges to, bit-for-bit (both are determined by
-    the component structure + lexicographic min, not by iteration
-    order)."""
+    """Union-find with min-root merging over ``(u, v)`` rows: the same
+    min-member canonical ids the star loop converges to, bit-for-bit
+    (both are determined by the component structure + lexicographic min,
+    not by iteration order).  Duplicate edges are no-ops."""
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -91,26 +96,30 @@ def connected_components(
     Two physical strategies behind one contract, chosen on evidence
     (the ``kg.hints`` philosophy):
 
-    * edge count ≤ ``driver_threshold`` → ONE collect + driver-side
-      union-find.  The match graph is vocabulary-sized (distinct linked
-      surfaces), usually orders of magnitude under the corpus; the star
-      loop on such a graph costs ~5 scheduled Spark jobs per round —
-      pure fixed overhead that fell straight through to fleet scaling
-      efficiency (r4 floor profile: 20 jobs, 1.8 s of a trivial-corpus
-      run).  500k edges collect to ~tens of MB driver-side.
+    * at most ``driver_threshold`` edges → driver-side union-find over
+      ONE bounded collect (``limit(driver_threshold + 1)``, so the probe
+      is the collect itself; duplicate edges count toward the threshold
+      and union-find ignores them).  The match graph is vocabulary-sized
+      (distinct linked surfaces), usually orders of magnitude under the
+      corpus; the star loop on such a graph costs ~5 scheduled Spark
+      jobs per round — pure fixed overhead that fell straight through to
+      fleet scaling efficiency (r4 floor profile: 20 jobs, 1.8 s of a
+      trivial-corpus run).  500k edges collect to ~tens of MB
+      driver-side.
     * above the threshold → the alternating large-star/small-star loop,
       O(log n) rounds on any graph — the 10^12-edge path.
 
+    The edges are checkpointed once first, so an expensive input
+    (near-dup pairs, graph edges) is computed once whichever path runs.
     Both produce identical (mention_id, canonical_id) rows (equivalence
     is property-tested)."""
     e = (
         pairs.select(F.col("a").alias("u"), F.col("b").alias("v"))
         .where(F.col("u") != F.col("v"))
-        .distinct()
         .localCheckpoint()
     )
-    if driver_threshold and e.count() <= driver_threshold:
-        out = _driver_cc([(r.u, r.v) for r in e.collect()])
+    rows = e.limit(driver_threshold + 1).collect() if driver_threshold else None
+    if rows is not None and len(rows) <= driver_threshold:
         # schema from the INPUT id type, not a hardcoded string pair: the
         # graph surface feeds arbitrary vertex id types here, and a
         # hardcoded string schema made the contract size-dependent
@@ -118,16 +127,23 @@ def connected_components(
         # ADVICE r4).  Python min() on the collected values orders
         # exactly like the distributed least/min for both strings and
         # integers, so the canonical roots stay identical across paths.
-        id_type = e.schema["u"].dataType
+        import pandas as pd
         from pyspark.sql.types import StructField, StructType
 
+        id_type = e.schema["u"].dataType
         schema = StructType(
             [
                 StructField("mention_id", id_type),
                 StructField("canonical_id", id_type),
             ]
         )
-        return e.sparkSession.createDataFrame(out, schema)
+        # a pandas frame crosses as Arrow into a local relation whose
+        # size Catalyst knows, so a join against it broadcasts unhinted;
+        # from a list of tuples it became a stats-less RDD scan and a
+        # sort-merge join (canonicalize over a 300-file corpus's matches:
+        # 6 jobs against 4, 4-core host)
+        pdf = pd.DataFrame(_driver_cc(rows), columns=schema.names)
+        return e.sparkSession.createDataFrame(pdf, schema)
     prev = None
     for _ in range(max_iter):
         # superseded rounds' checkpoint blocks are freed by the

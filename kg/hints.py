@@ -88,27 +88,15 @@ def spread_to_slots(df: DataFrame) -> DataFrame:
     return df
 
 
-def fits_budget(
-    row_count: int, bytes_per_row: int, max_bytes: int | None = None
-) -> bool:
-    """``row_count × bytes_per_row`` within ``max_bytes`` (by default
-    ``DEFAULT_MAX_BYTES``, read at call time): ``broadcast_if_small``'s
-    test, for callers that choose a plan on the same budget."""
-    budget = DEFAULT_MAX_BYTES if max_bytes is None else max_bytes
-    return row_count * bytes_per_row <= budget
-
-
 def broadcast_if_small(
-    df: DataFrame,
-    row_count: int,
-    bytes_per_row: int,
-    max_bytes: int | None = None,
+    df: DataFrame, row_count: int, bytes_per_row: int
 ) -> DataFrame:
-    """Broadcast hint iff ``row_count × bytes_per_row`` fits the budget
-    (``fits_budget``).  For materialized DataFrames whose Catalyst stats
-    are unknown (e.g. a localCheckpoint'd mapInPandas result) — the
-    caller supplies the row count it already paid for."""
-    if fits_budget(row_count, bytes_per_row, max_bytes):
+    """Broadcast hint iff ``row_count × bytes_per_row`` fits
+    ``DEFAULT_MAX_BYTES`` (read at call time).  For materialized
+    DataFrames whose Catalyst stats are unknown (e.g. a localCheckpoint'd
+    mapInPandas result) — the caller supplies the row count it already
+    paid for."""
+    if row_count * bytes_per_row <= DEFAULT_MAX_BYTES:
         return F.broadcast(df)
     return df
 

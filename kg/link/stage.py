@@ -16,42 +16,46 @@ Everything except the per-mention embedding stays inside whole-stage codegen.
 The LSH band self-join is the only quadratic-risk spot; a bucket-size cap
 drops degenerate stop-surface buckets (web-scale guard, documented below).
 
-Two regimes, one output.  Link works on the mention VOCABULARY, not the
-corpus, and at the sizes the scorer already broadcasts whole
-(``n_mentions × _MENTION_ROW_BYTES ≤ kg.hints.DEFAULT_MAX_BYTES``, ~65k
-mentions) the Spark plan above is mostly fixed cost: ~12 scheduled jobs
-for a few thousand rows.  Below that gate the pipeline runs
-``driver_match_pairs`` instead: one Arrow collect of the mentions (shingle
-hashes computed map-side, so Python needs no Spark-compatible xxhash64),
-then signatures (``kg.ops.minhash.minhash_fold``, the UDF's own fold),
-banding, the bucket cap, scoring (``_embed_batches`` + the dot in
-``_dot``'s fold order) and the match filter in numpy.  Its rows equal
-``match_pairs``' bit for bit, floats included, with one documented
-exception: Spark keys a band bucket on ``xxhash64`` of the comma-joined
-signature slice, the driver on the raw slice, so the two differ only if
-two different slices of one (kind, band) collide in 64 bits.  Above the
-gate ``match_pairs`` runs unchanged.
+Two regimes, one entry.  Link works on the mention VOCABULARY, not the
+corpus, and for a vocabulary of a few thousand rows the Spark plan above
+is mostly fixed cost: ~12 scheduled jobs.  ``match_pairs`` therefore
+collects the mentions first, at most one row past the budget
+(``kg.hints.DEFAULT_MAX_BYTES // _MENTION_ROW_BYTES``, ~65k mentions; shingle
+hashes computed map-side, so Python needs no Spark-compatible xxhash64).
+When they all fit, ``_driver_matches`` runs signatures
+(``kg.ops.minhash.minhash_fold``, the UDF's own fold), banding, the bucket
+cap, scoring (``_embed_batches`` + the dot in ``_dot``'s fold order) and
+the match filter in numpy; otherwise the Spark plan runs.  Either way
+link logs one ``link_path`` event: ``path`` ("driver" or "spark") and
+``mentions`` (the vocabulary size; None on the Spark path, which does
+not count it).  The two paths' rows are equal bit for bit, floats
+included, with one documented exception: Spark keys a band bucket on
+``xxhash64`` of the comma-joined signature slice, the driver on the raw
+slice, so the two differ only if two different slices of one (kind,
+band) collide in 64 bits.
 
-The gate is a memory bound, not a speed crossover: link + canonicalize
+The budget is a memory bound, not a speed crossover: link + canonicalize
 on planted vocabularies of 3k, 10k, 30k, 65k and 100k mentions took a
 median 2.2 / 3.4 / 6.3 / 12.0 / 19.2 s wall on the driver against
 7.4 / 8.7 / 11.8 / 21.0 / 35.1 s as Spark jobs (``local[4]``, 4-core
-host, three runs each), so no speed crossover lies below the gate.
-Past it, the Spark path spreads a vocabulary that no longer fits the
-one-process budget over the executors.
+host, three runs each), so no speed crossover lies below it.  Past it,
+the Spark path spreads a vocabulary that no longer fits the one-process
+budget over the executors.
 """
 
 from __future__ import annotations
 
+import functools
 import itertools
 from collections import defaultdict
 
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from kg import hints
 from kg.conf import PipelineConfig
-from kg.hints import broadcast_if_small, fits_budget
 from kg.ids import mention_id, truncated_surface
+from kg.log import log_event
 
 # the library's one dot-product definition (IEEE fold order is part of
 # the similarity module's oracle contract — no second copy to drift)
@@ -121,18 +125,26 @@ def candidate_pairs(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 _EMB_DIM = 32
-# per-mention payload model for the broadcast gate: shingle array (~20
-# × ~10 B strings + Arrow/UnsafeRow overhead) + 32 doubles + a 64-char id
-# ≈ 1 KB — so the 64 MB budget admits ~65k mentions; past that the scorer
-# join degrades to a shuffle join instead of an executor OOM.
+# per-mention payload model for the driver path's budget: shingle array
+# (~20 × ~10 B strings + Arrow overhead) + 32 doubles + a 64-char id
+# ≈ 1 KB — so the 64 MB budget admits ~65k mentions on the driver; past
+# that the Spark plan spreads the vocabulary over the executors.
 _MENTION_ROW_BYTES = 1024
 
 
-def scorer_broadcasts(n_mentions: int) -> bool:
-    """Whether ``score_pairs`` broadcasts an ``n_mentions`` vocabulary
-    whole: the budget test ``broadcast_if_small`` applies there, and the
-    pipeline's gate for the driver path (module docstring)."""
-    return fits_budget(n_mentions, _MENTION_ROW_BYTES)
+@functools.lru_cache(maxsize=1 << 16)
+def _shingle_vec(s: str) -> "np.ndarray":
+    """The hash-seeded random vector of one shingle, read-only.  Memoized
+    across calls (and, in a reused Python worker, across tasks): building
+    the RNG is the cost, and all 36³ ``[a-z0-9]`` trigrams fit the cache."""
+    import numpy as np
+
+    rng = np.random.default_rng(
+        int.from_bytes(s.encode()[:8].ljust(8, b"\0"), "big")
+    )
+    v = rng.standard_normal(_EMB_DIM)
+    v.flags.writeable = False
+    return v
 
 
 def _embed_batches(batches) -> "pd.DataFrame":
@@ -140,31 +152,17 @@ def _embed_batches(batches) -> "pd.DataFrame":
     hash-seeded random projection of the shingle set, normalized.  A
     stand-in with the exact Spark plumbing (Arrow batches in, array
     column out) a learned encoder would use — swap the body for a model
-    without touching the plan.  Shingle vectors are memoized per batch:
-    the shingle vocabulary is tiny relative to its usage count, so the
-    RNG construction cost is amortized away (the previous design built a
-    fresh RNG per shingle per PAIR — the link stage's wall at vocabulary
-    growth, VERDICT r1)."""
+    without touching the plan.  Shingle vectors come from
+    ``_shingle_vec``'s cache: the shingle vocabulary is tiny relative to
+    its usage count."""
     import numpy as np
-
-    cache: dict[str, "np.ndarray"] = {}
-
-    def vec(s: str) -> "np.ndarray":
-        v = cache.get(s)
-        if v is None:
-            rng = np.random.default_rng(
-                int.from_bytes(s.encode()[:8].ljust(8, b"\0"), "big")
-            )
-            v = rng.standard_normal(_EMB_DIM)
-            cache[s] = v
-        return v
 
     for pdf in batches:
         out = np.zeros((len(pdf), _EMB_DIM))
         for i, sh in enumerate(pdf["shingles"]):
             if sh is None or len(sh) == 0:
                 continue
-            v = np.sum([vec(s) for s in sh], axis=0)
+            v = np.sum([_shingle_vec(s) for s in sh], axis=0)
             n = np.linalg.norm(v)
             out[i] = v / n if n > 0 else v
         yield pd.DataFrame(
@@ -184,33 +182,24 @@ def score_pairs(
     vocabulary-sized input) and carried as an array column into the pair
     join — the scorer itself does zero per-pair Python.
 
-    The mentions side is vocabulary-sized TODAY, but the vocabulary grows
-    with the corpus — the broadcast hint is gated on the row count (paid
-    for once: the checkpoint materializes the embeddings anyway, so the
-    count scans cached blocks; without the checkpoint the un-materialized
-    mapInPandas plan would be EXECUTED TWICE, once per join side)."""
+    The embedded vocabulary is checkpointed: without it the
+    un-materialized mapInPandas plan would be EXECUTED TWICE, once per
+    join side.  No broadcast hint: ``match_pairs`` runs this plan only
+    for a vocabulary past the one-process budget, so the join strategy
+    is Catalyst's and AQE's to choose."""
     embedded = mentions.select("mention_id", "shingles").mapInPandas(
         _embed_batches,
         schema="mention_id string, shingles array<string>, emb array<double>",
     ).localCheckpoint()
-    n_mentions = embedded.count()
-    ma = broadcast_if_small(
-        embedded.select(
-            F.col("mention_id").alias("a"),
-            F.col("shingles").alias("sh_a"),
-            F.col("emb").alias("emb_a"),
-        ),
-        n_mentions,
-        _MENTION_ROW_BYTES,
+    ma = embedded.select(
+        F.col("mention_id").alias("a"),
+        F.col("shingles").alias("sh_a"),
+        F.col("emb").alias("emb_a"),
     )
-    mb = broadcast_if_small(
-        embedded.select(
-            F.col("mention_id").alias("b"),
-            F.col("shingles").alias("sh_b"),
-            F.col("emb").alias("emb_b"),
-        ),
-        n_mentions,
-        _MENTION_ROW_BYTES,
+    mb = embedded.select(
+        F.col("mention_id").alias("b"),
+        F.col("shingles").alias("sh_b"),
+        F.col("emb").alias("emb_b"),
     )
     scored = (
         pairs.join(ma, "a")
@@ -246,10 +235,24 @@ def add_shingles(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
 
 
 def match_pairs(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """mentions (with shingles) → scored match pairs above threshold."""
-    pairs = candidate_pairs(mentions, cfg)
-    scored = score_pairs(pairs, mentions, cfg)
-    return scored.filter(F.col("is_match"))
+    """mentions (with shingles) → scored match pairs above threshold: on
+    the driver when the vocabulary fits the budget, as Spark jobs
+    otherwise (module docstring).  The size probe is the driver path's
+    own collect, bounded at one row past the budget, which is read at
+    call time."""
+    from kg.ops.minhash import xxhash64_base
+
+    cap = hints.DEFAULT_MAX_BYTES // _MENTION_ROW_BYTES
+    pdf = mentions.select(
+        "mention_id", "kind", "shingles",
+        F.transform("shingles", xxhash64_base).alias("_hs"),
+    ).limit(cap + 1).toPandas()
+    if len(pdf) > cap:
+        log_event("link_path", path="spark", mentions=None)
+        pairs = candidate_pairs(mentions, cfg)
+        return score_pairs(pairs, mentions, cfg).filter(F.col("is_match"))
+    log_event("link_path", path="driver", mentions=len(pdf))
+    return _driver_matches(pdf, mentions.sparkSession, cfg)
 
 
 # the scorer's output columns: the Spark path's schema, so the driver
@@ -259,18 +262,15 @@ _MATCH_SCHEMA = (
 )
 
 
-def driver_match_pairs(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """``match_pairs`` computed on the driver (module docstring): same
-    rows, one collect instead of ~12 jobs.  For vocabularies inside the
-    scorer's broadcast budget, which the caller gates on."""
+def _driver_matches(
+    pdf: "pd.DataFrame", spark, cfg: PipelineConfig
+) -> DataFrame:
+    """``match_pairs``' rows from its collected mentions (``mention_id,
+    kind, shingles`` and the shingles' base hashes ``_hs``), in numpy."""
     import numpy as np
 
-    from kg.ops.minhash import minhash_fold, xxhash64_base
+    from kg.ops.minhash import minhash_fold
 
-    pdf = mentions.select(
-        "mention_id", "kind", "shingles",
-        F.transform("shingles", xxhash64_base).alias("_hs"),
-    ).toPandas()
     ids, kinds = pdf["mention_id"].to_numpy(), pdf["kind"].tolist()
     # signatures of the mentions with shingles (the Arrow UDF drops the
     # rest), then buckets keyed on (kind, band, signature slice)
@@ -312,19 +312,4 @@ def driver_match_pairs(mentions: DataFrame, cfg: PipelineConfig) -> DataFrame:
         }
     # a pandas frame crosses into the JVM as Arrow: writing 3.5k matches
     # took ~0.1 s this way, ~0.5 s from a list of tuples (4-core host)
-    spark = mentions.sparkSession
     return spark.createDataFrame(pd.DataFrame(cols), _MATCH_SCHEMA).coalesce(1)
-
-
-def run_link(triples: DataFrame, cfg: PipelineConfig) -> tuple[DataFrame, DataFrame]:
-    """Stage entry: triples → (mentions, scored match pairs).
-
-    mentions is vocabulary-sized but derives from a corpus-sized distinct;
-    it feeds candidate generation AND both sides of the scorer join, so it
-    is materialized once (localCheckpoint — GC-freed blocks, unlike a
-    persist nobody can unpersist) — otherwise every consumer re-scans the
-    full triple set.  (The pipeline uses the durable mentions write as
-    the materialization instead — see ``add_shingles``.)
-    """
-    mentions = mentions_from_triples(triples, cfg).localCheckpoint()
-    return mentions, match_pairs(mentions, cfg)

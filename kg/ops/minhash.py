@@ -83,7 +83,7 @@ def minhash_fold(
     base-hash arrays: ``sig[i, p] = min((a_p·h + b_p) mod PRIME)`` over
     the hashes ``h`` of ``rows[i]``.  The one definition of the signature
     arithmetic, shared by the Arrow UDF below and the driver-side link
-    (``kg.link.stage.driver_match_pairs``).
+    (``kg.link.stage._driver_matches``).
 
     Exact int64: h < PRIME and a_p < PRIME keep a_p·h + b_p < 2^63, so
     numpy computes the same integers the JVM does.  ``perms`` fused

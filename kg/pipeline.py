@@ -20,9 +20,10 @@ in one of two shapes:
     inputs are vocabulary- or output-sized, or (near-dup pairs) cross
     buckets by construction.  The stage is skipped only when it is
     recorded done and its outputs exist; otherwise its whole output is
-    rebuilt and overwritten.  Link and canonicalize run on the driver
-    while the mention vocabulary fits the scorer's broadcast budget
-    (``_vocab_regime``), as Spark jobs above it; both paths write the
+    rebuilt and overwritten.  Link and canonicalize each choose, in
+    their own module, between a driver path for a vocabulary-sized input
+    and Spark jobs above it (``kg.link.match_pairs``,
+    ``kg.canonicalize.cc.connected_components``); both paths write the
     same rows.
 
 Bucketed stages order a write as: data durable → downstream lineage
@@ -71,17 +72,11 @@ from pyspark.sql import (
     functions as F,
 )
 
-from kg.canonicalize import driver_canonicalize, run_canonicalize
+from kg.canonicalize import run_canonicalize
 from kg.conf import PipelineConfig
 from kg.extract import run_extract
 from kg.lineage import LineageStore, StageTimer, bucket_col
-from kg.link import (
-    add_shingles,
-    driver_match_pairs,
-    match_pairs,
-    mentions_from_triples,
-    scorer_broadcasts,
-)
+from kg.link import add_shingles, match_pairs, mentions_from_triples
 from kg.log import log_event
 from kg.materialize import run_materialize
 
@@ -132,29 +127,11 @@ def _footer_stats(path: str, col: str, rows: list[dict]) -> list[dict]:
     paths only (``PipelineConfig`` rejects ``scheme://`` warehouses)."""
     for r in rows:
         bucket_dir = os.path.join(path, f"{col}={r['bucket']}")
-        r["rows_out"] = _footer_rows(bucket_dir)
+        r["rows_out"] = sum(
+            pq.ParquetFile(f).metadata.num_rows
+            for f in glob.glob(os.path.join(bucket_dir, "*.parquet"))
+        )
     return rows
-
-
-def _footer_rows(path: str) -> int:
-    """Rows in the parquet files directly under ``path``, summed from
-    their footers (0 for an absent dir): no Spark job."""
-    return sum(
-        pq.ParquetFile(f).metadata.num_rows
-        for f in glob.glob(os.path.join(path, "*.parquet"))
-    )
-
-
-def _vocab_regime(mentions_path: str) -> dict:
-    """Where link and canonicalize run: ``{"path": "driver" | "spark",
-    "mentions": n}``.  The driver path runs iff ``score_pairs`` would
-    broadcast the whole embedded vocabulary of ``n`` mentions to every
-    executor anyway (``kg.link.scorer_broadcasts``).  ``n`` comes from
-    the durable mentions table's footers, so canonicalize takes link's
-    path also when link was skipped."""
-    n = _footer_rows(mentions_path)
-    path = "driver" if scorer_broadcasts(n) else "spark"
-    return {"path": path, "mentions": n}
 
 
 def _only(df: DataFrame, col: str, buckets: set[int], n: int) -> DataFrame:
@@ -313,7 +290,7 @@ def _atomic_stage(
     lineage: LineageStore,
     stage: str,
     outputs: tuple[str, ...],
-    build: Callable[[], dict | None],
+    build: Callable[[], None],
     input_fp: str | None = None,
 ) -> None:
     """Stage-level resume (module docstring).  Skipped only when recorded
@@ -322,8 +299,7 @@ def _atomic_stage(
     stage's own and downstream lineage is dropped first, so a crash
     mid-rebuild leaves it unrecorded; then the outputs are deleted and
     ``build`` writes them whole — a partitioned dynamic overwrite alone
-    would keep partitions the new output lacks.  Fields ``build``
-    returns are logged on ``stage_done``.  Staleness needs no check
+    would keep partitions the new output lacks.  Staleness needs no check
     of its own: an upstream stage that wrote new output has already
     dropped this stage's lineage."""
     if lineage.stage_done(stage) and all(map(os.path.exists, outputs)):
@@ -336,9 +312,9 @@ def _atomic_stage(
     with StageTimer() as t:
         for p in outputs:
             shutil.rmtree(p, ignore_errors=True)
-        fields = build() or {}
+        build()
     lineage.record_stage(stage, -1, -1, t.ms, input_fp=input_fp)
-    log_event("stage_done", stage=stage, duration_ms=t.ms, **fields)
+    log_event("stage_done", stage=stage, duration_ms=t.ms)
 
 
 def _dedup_exact_keep_first(df: DataFrame) -> DataFrame:
@@ -491,12 +467,7 @@ def run_pipeline(
             mentions_path,
         )
         mentions = add_shingles(spark.read.parquet(mentions_path), cfg)
-        regime = _vocab_regime(mentions_path)
-        matcher = (
-            driver_match_pairs if regime["path"] == "driver" else match_pairs
-        )
-        _write(matcher(mentions, cfg), matches_path)
-        return {"regime": regime}
+        _write(match_pairs(mentions, cfg), matches_path)
 
     _atomic_stage(lineage, "link", (mentions_path, matches_path), link)
     mentions = spark.read.parquet(mentions_path)
@@ -504,16 +475,10 @@ def run_pipeline(
 
     emap_path = cfg.table_path("entity_map")
 
-    def canonicalize():
-        regime = _vocab_regime(mentions_path)
-        canon = (
-            driver_canonicalize if regime["path"] == "driver"
-            else run_canonicalize
-        )
-        _write(canon(mentions, matches), emap_path)
-        return {"regime": regime}
-
-    _atomic_stage(lineage, "canonicalize", (emap_path,), canonicalize)
+    _atomic_stage(
+        lineage, "canonicalize", (emap_path,),
+        lambda: _write(run_canonicalize(mentions, matches), emap_path),
+    )
     entity_map = spark.read.parquet(emap_path)
 
     # one lineage stage per element kind, the sink partitioned by a bucket

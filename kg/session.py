@@ -113,12 +113,10 @@ def get_spark(
         # byte but far fewer bytes — compression CPU parallelizes across
         # cores while memory/disk bandwidth does not, so trading bandwidth
         # for compute is exactly what a bandwidth-bound stage needs to
-        # scale (and on a real cluster it cuts network shuffle too)
-        .config("spark.io.compression.codec", os.environ.get("KG_IO_CODEC", "zstd"))
-        .config(
-            "spark.sql.parquet.compression.codec",
-            os.environ.get("KG_PARQUET_CODEC", "zstd"),
-        )
+        # scale (and on a real cluster it cuts network shuffle too);
+        # a deployment that wants another codec passes extra_conf
+        .config("spark.io.compression.codec", "zstd")
+        .config("spark.sql.parquet.compression.codec", "zstd")
         .config("spark.ui.enabled", "false")
         .config(
             "spark.driver.memory",

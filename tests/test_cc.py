@@ -44,14 +44,19 @@ def test_driver_fast_path_equals_star_loop(spark):
     """The evidence-gated driver union-find and the distributed star
     loop are two physical strategies behind ONE contract: identical
     (mention_id, canonical_id) rows on an adversarial mix (chains,
-    triangle, star, singleton-free edge soup)."""
+    triangle, star, singleton-free edge soup).  Neither deduplicates its
+    input first, so the mix carries duplicate and reversed edges and
+    self-loops (one on a node with no other edge, which maps nowhere)."""
     edges = (
         [(f"n{i}", f"n{i+1}") for i in range(0, 40, 1)]          # long chain
         + [("t1", "t2"), ("t2", "t3"), ("t3", "t1")]              # triangle
         + [("hub", f"leaf{i}") for i in range(25)]                # star
         + [("zz9", "aa0"), ("mm5", "zz9")]                        # min at end
+        + [("n7", "n8"), ("n7", "n8"), ("t2", "t1"), ("aa0", "zz9")]  # dups
+        + [("hub", "hub"), ("n3", "n3"), ("solo", "solo")]        # self-loops
     )
     df = spark.createDataFrame(edges, "a string, b string")
     fast = connected_components(df)  # default threshold → driver path
     loop = connected_components(df, driver_threshold=0)  # force star loop
     assert sorted(map(tuple, fast.collect())) == sorted(map(tuple, loop.collect()))
+    assert fast.filter("mention_id = 'solo'").count() == 0

@@ -158,37 +158,6 @@ def test_materialize_degrades_to_shuffle_join_not_oom(spark):
     assert sorted(map(tuple, nodes.collect())) == blind_nodes
 
 
-def test_link_scorer_gate_degrades_to_shuffle_join(spark, monkeypatch):
-    """Force the mention vocabulary over budget (1-byte budget): score
-    matches must be identical, only the join strategy changes."""
-    import kg.link.stage as ls
-    from kg.datagen import source_files_df
-    from kg.extract import run_extract
-    from kg.link import run_link
-
-    cfg = PipelineConfig(partition_key="repo")
-    triples = run_extract(source_files_df(spark, 30)).localCheckpoint()
-    _, matches = run_link(triples, cfg)
-    baseline = sorted((r.a, r.b) for r in matches.collect())
-
-    monkeypatch.setattr(
-        ls, "broadcast_if_small",
-        lambda df, row_count, bytes_per_row, max_bytes=0: broadcast_if_small(
-            df, row_count, bytes_per_row, max_bytes=0
-        ),
-    )
-    with _conf(
-        spark,
-        **{
-            "spark.sql.autoBroadcastJoinThreshold": "-1",
-            "spark.sql.adaptive.enabled": "false",
-        },
-    ):
-        _, matches2 = run_link(triples, cfg)
-        assert "SortMergeJoin" in _plan(matches2)
-        assert sorted((r.a, r.b) for r in matches2.collect()) == baseline
-
-
 def test_denormalize_endpoints_gate_degrades_to_shuffle_join(spark, sf_dir):
     """The exported O4 helper (VERDICT r3 weak #1): a provably-small node
     dim keeps the broadcast; a stats-less (corpus-sized at scale) dim

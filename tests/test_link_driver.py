@@ -1,18 +1,23 @@
-"""The driver-side link and canonicalize (``driver_match_pairs``,
-``driver_canonicalize``) against their Spark twins (``match_pairs``,
-``run_canonicalize``): exactly equal rows, floats compared bit for bit."""
+"""Link's two paths through its one entry, ``match_pairs``: the driver
+path (taken at these sizes) against the Spark plan (taken with
+``kg.hints.DEFAULT_MAX_BYTES`` patched to 0) — exactly equal rows,
+floats compared bit for bit — and the entity_map ``run_canonicalize``
+builds from each."""
 
 from __future__ import annotations
 
+import json
+import logging
 import random
 import string
 
 import pytest
 
-from kg.canonicalize import driver_canonicalize, run_canonicalize
+from kg import hints
+from kg.canonicalize import run_canonicalize
 from kg.conf import PipelineConfig
 from kg.datagen import golden_triples
-from kg.link import driver_match_pairs, match_pairs, mentions_from_triples
+from kg.link import match_pairs, mentions_from_triples
 from kg.link.stage import _MAX_BUCKET
 from kg.pipeline import _write
 
@@ -78,11 +83,26 @@ def _rows(df) -> list[tuple]:
     return sorted(tuple(r) for r in df.collect())
 
 
+def _link_paths(caplog) -> list[tuple]:
+    """(path, mentions) of every ``link_path`` event logged so far."""
+    events = (json.loads(r.getMessage()) for r in caplog.records
+              if r.name == "kg")
+    return [(e["path"], e["mentions"]) for e in events
+            if e["event"] == "link_path"]
+
+
 @pytest.mark.parametrize("vocab", sorted(VOCABS))
-def test_driver_link_and_canonicalize_equal_spark(spark, vocab, tmp_path):
+def test_driver_link_and_canonicalize_equal_spark(
+    spark, vocab, tmp_path, monkeypatch, caplog
+):
+    caplog.set_level(logging.INFO, logger="kg")
     mentions = _mentions(spark, vocab)
+    driver_matches = match_pairs(mentions, CFG)
+    monkeypatch.setattr(hints, "DEFAULT_MAX_BYTES", 0)
     spark_matches = match_pairs(mentions, CFG).localCheckpoint()
-    driver_matches = driver_match_pairs(mentions, CFG)
+    assert _link_paths(caplog) == [
+        ("driver", mentions.count()), ("spark", None)
+    ]
     # exact tuple equality: the floats are compared bit for bit
     assert _rows(driver_matches) == _rows(spark_matches)
     # the written tables have the same columns and types, rows or none
@@ -90,7 +110,7 @@ def test_driver_link_and_canonicalize_equal_spark(spark, vocab, tmp_path):
         _write(df, str(tmp_path / name))
     written = [spark.read.parquet(str(tmp_path / n)) for n in ("spark", "driver")]
     assert written[0].schema == written[1].schema
-    assert _rows(driver_canonicalize(mentions, written[1])) == _rows(
+    assert _rows(run_canonicalize(mentions, written[1])) == _rows(
         run_canonicalize(mentions, written[0])
     )
 
@@ -119,9 +139,9 @@ def test_driver_link_and_canonicalize_equal_spark(spark, vocab, tmp_path):
 
 
 def test_driver_entity_map_equals_pinned_golden(spark, tmp_path):
-    """The driver link and canonicalize over the 200-file corpus's
-    mentions reproduce the pinned entity_map (the extractor's triples
-    equal ``golden_triples(200)``: ``tests/test_goldens_pinned.py``)."""
+    """Link (its driver path) and canonicalize over the 200-file
+    corpus's mentions reproduce the pinned entity_map (the extractor's
+    triples equal ``golden_triples(200)``: ``tests/test_goldens_pinned.py``)."""
     import os
 
     import pandas as pd
@@ -132,7 +152,7 @@ def test_driver_entity_map_equals_pinned_golden(spark, tmp_path):
         ),
         CFG,
     ).localCheckpoint()
-    _write(driver_match_pairs(mentions, CFG), str(tmp_path / "matches"))
+    _write(match_pairs(mentions, CFG), str(tmp_path / "matches"))
     matches = spark.read.parquet(str(tmp_path / "matches"))
     pinned = pd.read_parquet(
         os.path.join(
@@ -140,5 +160,5 @@ def test_driver_entity_map_equals_pinned_golden(spark, tmp_path):
         )
     )
     assert sorted(pinned.itertuples(index=False, name=None)) == _rows(
-        driver_canonicalize(mentions, matches)
+        run_canonicalize(mentions, matches)
     )

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from kg.conf import PipelineConfig
 from kg.datagen import source_files_df
 from kg.extract import run_extract
-from kg.link import run_link
+from kg.link import match_pairs, mentions_from_triples
 from kg.canonicalize import run_canonicalize
 from kg.materialize import (
     as_graphson_edges,
@@ -30,8 +30,8 @@ N = 80
 def graph(spark):
     cfg = PipelineConfig()
     triples = run_extract(source_files_df(spark, N)).cache()
-    mentions, matches = run_link(triples, cfg)
-    emap = run_canonicalize(mentions, matches)
+    mentions = mentions_from_triples(triples, cfg).localCheckpoint()
+    emap = run_canonicalize(mentions, match_pairs(mentions, cfg))
     nodes, edges = run_materialize(triples, emap, cfg)
     return triples, emap, nodes.cache(), edges.cache()
 
@@ -162,8 +162,8 @@ def test_partition_key_is_threaded(spark):
     endpoints — KG_PARTITION_KEY=commit means pk IS the commit."""
     cfg = PipelineConfig(partition_key="commit")
     triples = run_extract(source_files_df(spark, 20)).cache()
-    mentions, matches = run_link(triples, cfg)
-    emap = run_canonicalize(mentions, matches)
+    mentions = mentions_from_triples(triples, cfg).localCheckpoint()
+    emap = run_canonicalize(mentions, match_pairs(mentions, cfg))
     nodes, edges = run_materialize(triples, emap, cfg)
 
     files = nodes.filter(F.col("label") == "file").select(

@@ -62,26 +62,23 @@ def _kg_events():
         logger.setLevel(level)
 
 
-def _regimes(events: list[dict]) -> dict:
-    """``{stage: regime}`` from the ``stage_done`` events that carry one
-    (link and canonicalize)."""
-    return {
-        e["stage"]: e["regime"]
-        for e in events
-        if e["event"] == "stage_done" and "regime" in e
-    }
+def _link_paths(events: list[dict]) -> list[tuple]:
+    """(path, mentions) of each ``link_path`` event (``match_pairs``)."""
+    return [
+        (e["path"], e["mentions"]) for e in events if e["event"] == "link_path"
+    ]
 
 
 @pytest.fixture(scope="module")
 def plain_build(spark, tmp_path_factory):
     """Restart build of the N-file corpus in default mode (no input
     fingerprints recorded), made once per module: (warehouse, snapshot,
-    the regimes its link and canonicalize logged).  Tests work on a
-    ``_copy`` of the warehouse."""
+    the paths its link logged).  Tests work on a ``_copy`` of the
+    warehouse."""
     cfg = _cfg(tmp_path_factory, "plain_build")
     with _kg_events() as events:
         out = run_pipeline(spark, source_files_df(spark, N), cfg, restart=True)
-    return cfg.warehouse, _snapshot(out), _regimes(events)
+    return cfg.warehouse, _snapshot(out), _link_paths(events)
 
 
 def _seeded_store(spark, tmp_path_factory) -> LineageStore:
@@ -555,25 +552,20 @@ def test_missing_output_rebuilds_recorded_stage(
 def test_over_budget_vocabulary_takes_the_spark_path(
     spark, tmp_path_factory, plain_build, monkeypatch
 ):
-    """``plain_build``, whose vocabulary is far under the broadcast
-    budget, ran link and canonicalize on the driver.  With the budget
-    forced to 0 they take the Spark path, and every table equals the
-    driver-path build's."""
+    """``plain_build``, whose vocabulary is far under the driver budget,
+    ran link on the driver.  With the budget forced to 0 link takes the
+    Spark path, and every table equals the driver-path build's."""
     from kg import hints
 
-    warehouse, golden, driver_regimes = plain_build
+    warehouse, golden, driver_paths = plain_build
     first = PipelineConfig(warehouse=warehouse)
     monkeypatch.setattr(hints, "DEFAULT_MAX_BYTES", 0)
     cfg = _cfg(tmp_path_factory, "spark_path")
     with _kg_events() as events:
         out = run_pipeline(spark, source_files_df(spark, N), cfg, restart=True)
     n = out["mentions"].count()
-    assert driver_regimes == {
-        s: {"path": "driver", "mentions": n} for s in ("link", "canonicalize")
-    }
-    assert _regimes(events) == {
-        s: {"path": "spark", "mentions": n} for s in ("link", "canonicalize")
-    }
+    assert driver_paths == [("driver", n)]
+    assert _link_paths(events) == [("spark", None)]
     for t in ("mentions", "matches", "entity_map"):
         want = spark.read.parquet(first.table_path(t)).collect()
         assert sorted(map(tuple, out[t].collect())) == sorted(map(tuple, want))
