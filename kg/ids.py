@@ -2,7 +2,7 @@
 
 Single definition of the mention-id recipe so the minting side
 (``kg.link.stage.mentions_from_triples``) and the lookup side
-(``kg.materialize.stage._resolved_objects``) can never diverge: both must
+(``kg.materialize.stage._resolved``) can never diverge: both must
 apply the same surface truncation before hashing, or a long object surface
 minted as ``sha2(kind:substr(obj))`` would be probed as ``sha2(kind:obj)``
 and silently miss the entity_map join.

@@ -270,10 +270,22 @@ class LineageStore:
 
 
 class StageTimer:
+    """A stage's wall time (``ms``) and the generated-code classes the
+    JVM compiled meanwhile (``compiles``, from Spark's codegen metrics).
+    A warm op finds its classes in the codegen cache
+    (``kg.session.CODEGEN_CACHE_ENTRIES``) and compiles none, so a
+    nonzero count on a rerun shows the cache thrashing again."""
+
+    def __init__(self, spark: SparkSession):
+        metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        self._compiled = metrics.METRIC_COMPILATION_TIME()
+
     def __enter__(self):
+        self.c0 = self._compiled.getCount()
         self.t0 = time.monotonic()
         return self
 
     def __exit__(self, *exc):
         self.ms = int((time.monotonic() - self.t0) * 1000)
+        self.compiles = self._compiled.getCount() - self.c0
         return False

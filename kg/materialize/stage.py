@@ -22,23 +22,32 @@ one mixed-domain parquet chunk), so the storage layout is columnar-flat
 and the document shape is a projection.
 
 Plan-shape notes (scale + latency):
-* the only join against a corpus-sized table is triples ⋈ mention_map,
-  and mention_map is vocabulary-sized → broadcast;
-* file nodes come from ONE groupBy(subj) (metadata via ``first`` +
-  imports via conditional ``collect_set``) instead of a distinct + a
-  separate aggregation + a join;
+* each output is ONE scan of triples, left-joined once to entity_map
+  (``_resolved``): vocabulary-sized, so broadcast under the
+  ``maybe_broadcast`` gate.  The join key (the object's mention id) is
+  null on defines-class rows, whose object is a class the file defines,
+  not an entity mention; off the broadcast path those rows share one
+  shuffle partition, which AQE's skew join splits;
+* nodes: every triple emits its 0-3 node contributions (its file, the
+  class it defines, its object entity) as structs through
+  ``explode(filter(array(...)))``, and ONE ``groupBy(id, label)``
+  aggregates all kinds — file metadata via ``first``, imports or entity
+  surfaces via ``collect_set`` — instead of one groupBy per kind and a
+  union.  Ids of different kinds cannot collide (sha of disjoint
+  prefixes), so grouping on them equals the union of per-kind groups;
+* edges are pure projections over the resolved triples — zero shuffles
+  until the partitioned write; a defines-class row picks its class_def
+  endpoint with ``when``;
 * no dropDuplicates anywhere: ids are unique by construction — file/class
   subjects embed repo:path (unique per source row), entity ids are
   canonical mention ids (grouped), and edge ids hash (out,label,in,repo,
   path) of already-unique triples.  Each removed dedup is a full-table
   shuffle that would dominate at 10^12-file scale.
-* edges are pure projections over the resolved triples — zero shuffles
-  until the partitioned write.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, functions as F
 
 from kg.conf import PipelineConfig
 from kg.hints import maybe_broadcast
@@ -48,13 +57,11 @@ from kg.materialize.documents import (
     json_array,
     rename_reserved_keys,
 )
+from kg.schemas import PREDICATES
 
-# entity label per predicate of the *object* mention
-_OBJ_KIND = {
-    "imports-of": "module",
-    "extends": "class",
-    "calls-function": "function",
-}
+# a file node's properties from its provenance, and the edge provenance
+_FILE_META = ("path", "commit", "lang", "content_sha")
+_PROVENANCE = ("repo", *_FILE_META)
 
 
 def _entity_bucket(id_col):
@@ -62,33 +69,142 @@ def _entity_bucket(id_col):
     return F.substring(id_col, 1, 2)
 
 
-def _resolved_objects(triples: DataFrame, entity_map: DataFrame) -> DataFrame:
-    """Triple rows whose object is an entity mention, with the object
-    resolved to its canonical id.  calls-function objects are entities
-    too, but unlinked (kind='function', canonical = own mention id)."""
-    kind = F.when(F.col("pred") == "imports-of", F.lit("module")).when(
-        F.col("pred") == "extends", F.lit("class")
-    ).otherwise(F.lit("function"))
+def _class_id() -> Column:
+    """class_def node id of a defines-class row (class defined in a file)."""
+    return F.sha2(
+        F.concat_ws(":", F.lit("class"), F.col("repo"), F.col("path"), F.col("obj")),
+        256,
+    )
+
+
+def _resolved(triples: DataFrame, em: DataFrame) -> DataFrame:
+    """``triples`` plus the object's entity kind ``obj_kind`` and
+    canonical id ``obj_canonical``, both null where the object is not an
+    entity mention.  calls-function objects are entities too, but
+    unlinked (kind='function', canonical = own mention id)."""
+    pred = F.col("pred")
+    kind = F.when(pred == "imports-of", F.lit("module")).when(
+        pred == "extends", F.lit("class")
+    ).when(pred == "calls-function", F.lit("function"))
     # mention_id applies the same surface truncation the link stage used
     # when minting ids — a long surface must probe entity_map with the
     # identical key or canonicalization silently misses (kg.ids).
-    t = triples.filter(
-        F.col("pred").isin(*_OBJ_KIND.keys())
-    ).withColumn("obj_kind", kind).withColumn(
-        "obj_mention", mention_id(F.col("obj_kind"), F.col("obj"))
-    )
-    # entity_map is vocabulary-sized TODAY, but distinct surfaces grow with
-    # the corpus (10^12 files → plausibly 10^8 rows); the broadcast hint is
-    # therefore GATED on Catalyst's size estimate (parquet-backed input →
-    # real bytes). Unknown/over-budget → no hint, AQE picks the join.
-    em = maybe_broadcast(
-        entity_map.select(
-            F.col("mention_id").alias("obj_mention"),
-            F.col("canonical_id").alias("obj_canonical"),
-        )
+    t = triples.withColumn("obj_kind", kind).withColumn(
+        "obj_mention",
+        F.when(kind.isNotNull(), mention_id(F.col("obj_kind"), F.col("obj"))),
     )
     return t.join(em, "obj_mention", "left").withColumn(
         "obj_canonical", F.coalesce("obj_canonical", "obj_mention")
+    )
+
+
+def _nodes(resolved: DataFrame, pk: str) -> DataFrame:
+    """One row per node from one aggregation (module docstring)."""
+    null = F.lit(None).cast("string")
+
+    def contribution(cond, id_, label, pk_val, item=null, subj=null,
+                     name=null, prov=False):
+        # one struct type for every kind: ``item`` is a file's import or
+        # an entity's surface, collected per node; the rest is per-node
+        # metadata, taken with ``first``
+        return F.when(cond, F.struct(
+            id_.alias("id"), label.alias("label"),
+            pk_val.alias("partition_key"), item.alias("item"),
+            subj.alias("subj"), name.alias("name"),
+            *[(F.col(c) if prov else null).alias(c) for c in _FILE_META],
+        ))
+
+    file_ = contribution(
+        F.col("subj").startswith("file:"), F.sha2(F.col("subj"), 256),
+        F.lit("file"), F.col(pk),
+        item=F.when(F.col("pred") == "imports-of", F.col("obj")),
+        subj=F.col("subj"), prov=True,
+    )
+    class_def = contribution(
+        F.col("pred") == "defines-class", _class_id(), F.lit("class_def"),
+        F.col(pk), subj=F.col("subj"), name=F.col("obj"),
+    )
+    entity = contribution(
+        F.col("obj_kind").isNotNull(), F.col("obj_canonical"),
+        F.col("obj_kind"), _entity_bucket(F.col("obj_canonical")),
+        item=F.col("obj"),
+    )
+    grouped = (
+        resolved.select(F.explode(F.filter(
+            F.array(file_, class_def, entity), lambda n: n.isNotNull()
+        )).alias("n"))
+        .select("n.*")
+        .groupBy("id", "label")
+        .agg(
+            *[F.first(c).alias(c) for c in (
+                "partition_key", "subj", "name", *_FILE_META
+            )],
+            F.collect_set("item").alias("items"),
+        )
+    )
+    label = F.col("label")
+    props = F.when(label == "file", F.create_map(
+        F.lit("id"), F.col("subj"),
+        F.lit("path"), F.col("path"),
+        F.lit("commit"), F.col("commit"),
+        F.lit("lang"), F.col("lang"),
+        F.lit("content_sha"), F.col("content_sha"),
+        F.lit("imports"), json_array(F.col("items")),
+    )).when(label == "class_def", F.create_map(
+        F.lit("name"), F.col("name"),
+        F.lit("file"), F.col("subj"),
+    )).otherwise(F.create_map(
+        F.lit("surfaces"), json_array(F.col("items")),
+        F.lit("kind"), label,
+    ))
+    return grouped.select(
+        "id", "label", "partition_key",
+        rename_reserved_keys(props).alias("properties"),
+    )
+
+
+def _edges(resolved: DataFrame, pk: str) -> DataFrame:
+    """One edge per triple: pure projections, no shuffle."""
+    is_def = F.col("pred") == "defines-class"
+    subj_is_file = F.col("subj").startswith("file:")
+    edges = resolved.select(
+        F.sha2(F.col("subj"), 256).alias("out_id"),
+        F.when(subj_is_file | is_def, F.lit("file"))
+        .otherwise(F.lit("class_def")).alias("out_label"),
+        F.col(pk).alias("out_pk"),
+        F.col("pred").alias("label"),
+        F.when(is_def, _class_id())
+        .otherwise(F.col("obj_canonical")).alias("in_id"),
+        F.when(is_def, F.lit("class_def"))
+        .otherwise(F.col("obj_kind")).alias("in_label"),
+        F.when(is_def, F.col(pk))
+        .otherwise(_entity_bucket(F.col("obj_canonical"))).alias("in_pk"),
+        # raw surface keeps the edge id unique even when two variant
+        # surfaces in one file canonicalize to the same entity (one edge
+        # per extracted triple instance — no dedup shuffle needed)
+        F.col("obj").alias("surface"),
+        *_PROVENANCE,
+    )
+    return edges.withColumn(
+        "id",
+        edge_namespace(
+            F.sha2(
+                F.concat_ws(
+                    "|", "out_id", "label", "in_id", "surface", "repo", "path"
+                ),
+                256,
+            )
+        ),
+    ).select(
+        "id", "label", "out_id", "in_id", "out_label", "in_label",
+        "out_pk", "in_pk",
+        # provenance stays FLAT through shuffle + parquet: a
+        # map<string,string> bag repeats its keys in every row, mixes all
+        # value domains into one parquet column chunk (kills dictionary
+        # encoding) and dominated materialize's shuffle bytes — the r1
+        # scaling bottleneck.  The GraphSON property bag is a zero-shuffle
+        # READ-TIME projection: kg.materialize.documents.as_graphson_edges.
+        *_PROVENANCE,
     )
 
 
@@ -117,135 +233,18 @@ def run_materialize(
         raise ValueError(
             f"partition_key must be one of {_PK_CHOICES}, got {pk!r}"
         )
-    resolved = _resolved_objects(triples, entity_map)
-
-    # ---- file nodes: ONE shuffle (groupBy subj) -----------------------------
-    files = (
-        triples.filter(F.col("subj").startswith("file:"))
-        .groupBy("subj")
-        .agg(
-            F.first("repo").alias("repo"),
-            F.first("path").alias("path"),
-            F.first("commit").alias("commit"),
-            F.first("lang").alias("lang"),
-            F.first("content_sha").alias("content_sha"),
-            F.collect_set(
-                F.when(F.col("pred") == "imports-of", F.col("obj"))
-            ).alias("imports"),
-        )
-        .select(
-            F.sha2(F.col("subj"), 256).alias("id"),
-            F.lit("file").alias("label"),
-            F.col(pk).alias("partition_key"),
-            rename_reserved_keys(
-                F.create_map(
-                    F.lit("id"), F.col("subj"),
-                    F.lit("path"), F.col("path"),
-                    F.lit("commit"), F.col("commit"),
-                    F.lit("lang"), F.col("lang"),
-                    F.lit("content_sha"), F.col("content_sha"),
-                    F.lit("imports"), json_array(F.col("imports")),
-                )
-            ).alias("properties"),
+    # entity_map is vocabulary-sized TODAY, but distinct surfaces grow with
+    # the corpus (10^12 files → plausibly 10^8 rows); the broadcast hint is
+    # therefore GATED on Catalyst's size estimate (parquet-backed input →
+    # real bytes). Unknown/over-budget → no hint, AQE picks the join.
+    em = maybe_broadcast(
+        entity_map.select(
+            F.col("mention_id").alias("obj_mention"),
+            F.col("canonical_id").alias("obj_canonical"),
         )
     )
-
-    # ---- class_def nodes: one shuffle (groupBy class subject) ---------------
-    class_defs = (
-        triples.filter(F.col("pred") == "defines-class")
-        .groupBy(
-            F.concat_ws(
-                ":", F.lit("class"), F.col("repo"), F.col("path"), F.col("obj")
-            ).alias("csubj")
-        )
-        .agg(
-            F.first("obj").alias("name"),
-            F.first("subj").alias("fsubj"),
-            F.first(pk).alias("pk_val"),
-        )
-        .select(
-            F.sha2(F.col("csubj"), 256).alias("id"),
-            F.lit("class_def").alias("label"),
-            F.col("pk_val").alias("partition_key"),
-            rename_reserved_keys(
-                F.create_map(
-                    F.lit("name"), F.col("name"),
-                    F.lit("file"), F.col("fsubj"),
-                )
-            ).alias("properties"),
-        )
-    )
-
-    # ---- canonical entity nodes: one shuffle (groupBy canonical) ------------
-    entities = (
-        resolved.groupBy("obj_canonical", "obj_kind")
-        .agg(F.collect_set("obj").alias("surfaces"))
-        .select(
-            F.col("obj_canonical").alias("id"),
-            F.col("obj_kind").alias("label"),
-            _entity_bucket(F.col("obj_canonical")).alias("partition_key"),
-            rename_reserved_keys(
-                F.create_map(
-                    F.lit("surfaces"), json_array(F.col("surfaces")),
-                    F.lit("kind"), F.col("obj_kind"),
-                )
-            ).alias("properties"),
-        )
-    )
-
-    # branch ids cannot collide (sha of disjoint prefixes) → plain union,
-    # no dedup shuffle
-    nodes = files.unionByName(class_defs).unionByName(entities)
-
-    # ---- edges: pure projections, no shuffle ---------------------------------
-    subj_is_file = F.col("subj").startswith("file:")
-    base = resolved.select(
-        F.sha2(F.col("subj"), 256).alias("out_id"),
-        F.when(subj_is_file, F.lit("file")).otherwise(F.lit("class_def")).alias("out_label"),
-        F.col(pk).alias("out_pk"),
-        F.col("pred").alias("label"),
-        F.col("obj_canonical").alias("in_id"),
-        F.col("obj_kind").alias("in_label"),
-        _entity_bucket(F.col("obj_canonical")).alias("in_pk"),
-        # raw surface keeps the edge id unique even when two variant
-        # surfaces in one file canonicalize to the same entity (one edge
-        # per extracted triple instance — no dedup shuffle needed)
-        F.col("obj").alias("surface"),
-        "repo", "path", "commit", "lang", "content_sha",
-    )
-    defines = triples.filter(F.col("pred") == "defines-class").select(
-        F.sha2(F.col("subj"), 256).alias("out_id"),
-        F.lit("file").alias("out_label"),
-        F.col(pk).alias("out_pk"),
-        F.col("pred").alias("label"),
-        F.sha2(
-            F.concat_ws(":", F.lit("class"), F.col("repo"), F.col("path"), F.col("obj")), 256
-        ).alias("in_id"),
-        F.lit("class_def").alias("in_label"),
-        F.col(pk).alias("in_pk"),
-        F.col("obj").alias("surface"),
-        "repo", "path", "commit", "lang", "content_sha",
-    )
-    all_edges = base.unionByName(defines)
-    edges = all_edges.withColumn(
-        "id",
-        edge_namespace(
-            F.sha2(
-                F.concat_ws(
-                    "|", "out_id", "label", "in_id", "surface", "repo", "path"
-                ),
-                256,
-            )
-        ),
-    ).select(
-        "id", "label", "out_id", "in_id", "out_label", "in_label",
-        "out_pk", "in_pk",
-        # provenance stays FLAT through shuffle + parquet: a
-        # map<string,string> bag repeats its keys in every row, mixes all
-        # value domains into one parquet column chunk (kills dictionary
-        # encoding) and dominated materialize's shuffle bytes — the r1
-        # scaling bottleneck.  The GraphSON property bag is a zero-shuffle
-        # READ-TIME projection: kg.materialize.documents.as_graphson_edges.
-        "repo", "path", "commit", "lang", "content_sha",
+    nodes = _nodes(_resolved(triples, em), pk)
+    edges = _edges(
+        _resolved(triples.filter(F.col("pred").isin(*PREDICATES)), em), pk
     )
     return nodes, edges

@@ -70,6 +70,7 @@ from pyspark.sql import (
     SparkSession,
     Window as W,
     functions as F,
+    types as T,
 )
 
 from kg.canonicalize import run_canonicalize
@@ -79,6 +80,7 @@ from kg.lineage import LineageStore, StageTimer, bucket_col
 from kg.link import add_shingles, match_pairs, mentions_from_triples
 from kg.log import log_event
 from kg.materialize import run_materialize
+from kg.schemas import EDGES, ENTITY_MAP, MENTIONS, NODES, SCORED_PAIRS, TRIPLES
 
 STAGES = ("clean", "extract", "link", "canonicalize", "materialize")
 # every table a stage writes (--restart truncates them all)
@@ -132,6 +134,19 @@ def _footer_stats(path: str, col: str, rows: list[dict]) -> list[dict]:
             for f in glob.glob(os.path.join(bucket_dir, "*.parquet"))
         )
     return rows
+
+
+def _read(
+    spark: SparkSession, path: str, schema: T.StructType,
+    bucket: str | None = None,
+) -> DataFrame:
+    """A table the pipeline wrote, read with its declared ``schema`` (its
+    ``bucket`` partition column dropped): inferring the schema would run
+    a one-task Spark job on every read."""
+    if bucket is None:
+        return spark.read.schema(schema).parquet(path)
+    schema = T.StructType([*schema, T.StructField(bucket, T.IntegerType())])
+    return spark.read.schema(schema).parquet(path).drop(bucket)
 
 
 def _only(df: DataFrame, col: str, buckets: set[int], n: int) -> DataFrame:
@@ -255,7 +270,10 @@ def _bucketed_stage(
     if detect_changes:
         stats.append(_fingerprint("repo", "path", "content").alias("input_fp"))
     counted = {}
-    with StageTimer() as t, ThreadPoolExecutor(len(outputs)) as pool:
+    with (
+        StageTimer(lineage.spark) as t,
+        ThreadPoolExecutor(len(outputs)) as pool,
+    ):
         # the stats job reads only the source, and the outputs share no
         # computation: running them concurrently fills one job's barrier
         # and commit-tail gaps with another's tasks
@@ -283,7 +301,8 @@ def _bucketed_stage(
         if p:
             rows = [counted.get(b, {"bucket": b, **blank}) for b in sorted(p)]
             lineage.record_buckets(stage, _footer_stats(path, c, rows), t.ms)
-    log_event("stage_done", stage=event, duration_ms=t.ms)
+    log_event("stage_done", stage=event, duration_ms=t.ms,
+              codegen_compiles=t.compiles)
 
 
 def _atomic_stage(
@@ -309,12 +328,13 @@ def _atomic_stage(
         log_event("changed_input_invalidated", stage=stage)
     log_event("stage_start", stage=stage)
     lineage.invalidate_stages(stage, *_downstream(stage))
-    with StageTimer() as t:
+    with StageTimer(lineage.spark) as t:
         for p in outputs:
             shutil.rmtree(p, ignore_errors=True)
         build()
     lineage.record_stage(stage, -1, -1, t.ms, input_fp=input_fp)
-    log_event("stage_done", stage=stage, duration_ms=t.ms)
+    log_event("stage_done", stage=stage, duration_ms=t.ms,
+              codegen_compiles=t.compiles)
 
 
 def _dedup_exact_keep_first(df: DataFrame) -> DataFrame:
@@ -410,7 +430,7 @@ def _run_clean(
         _atomic_stage(
             lineage, "clean_minhash", (clean_path,), near_dedup, input_fp
         )
-    return spark.read.parquet(clean_path).drop("cbucket")
+    return _read(spark, clean_path, source_files.schema, "cbucket")
 
 
 def run_pipeline(
@@ -453,7 +473,7 @@ def run_pipeline(
         ).withColumn("bucket", bucket))],
         b, src, detect_changes,
     )
-    triples = spark.read.parquet(triples_path).drop("bucket")
+    triples = _read(spark, triples_path, TRIPLES, "bucket")
 
     mentions_path = cfg.table_path("mentions")
     matches_path = cfg.table_path("matches")
@@ -466,12 +486,12 @@ def run_pipeline(
             mentions_from_triples(triples, cfg).drop("shingles"),
             mentions_path,
         )
-        mentions = add_shingles(spark.read.parquet(mentions_path), cfg)
+        mentions = add_shingles(_read(spark, mentions_path, MENTIONS), cfg)
         _write(match_pairs(mentions, cfg), matches_path)
 
     _atomic_stage(lineage, "link", (mentions_path, matches_path), link)
-    mentions = spark.read.parquet(mentions_path)
-    matches = spark.read.parquet(matches_path)
+    mentions = _read(spark, mentions_path, MENTIONS)
+    matches = _read(spark, matches_path, SCORED_PAIRS)
 
     emap_path = cfg.table_path("entity_map")
 
@@ -479,7 +499,7 @@ def run_pipeline(
         lineage, "canonicalize", (emap_path,),
         lambda: _write(run_canonicalize(mentions, matches), emap_path),
     )
-    entity_map = spark.read.parquet(emap_path)
+    entity_map = _read(spark, emap_path, ENTITY_MAP)
 
     # one lineage stage per element kind, the sink partitioned by a bucket
     # of the partition key (the reference's pk-partitioned container,
@@ -488,7 +508,7 @@ def run_pipeline(
     # planned once, and only when a bucket is pending (planning alone took
     # 0.55-1.0 s for the 707-file benchmark corpus on a 4-core host)
     docs = functools.cache(lambda: run_materialize(triples, entity_map, cfg))
-    kinds = (("nodes", "partition_key"), ("edges", "out_pk"))
+    kinds = (("nodes", "partition_key", NODES), ("edges", "out_pk", EDGES))
     _bucketed_stage(
         lineage, "materialize",
         [
@@ -496,13 +516,13 @@ def run_pipeline(
              lambda _, i=i, pk=pk: docs()[i].withColumn(
                  "pk_bucket", bucket_col(pk, n_buckets=b)
              ))
-            for i, (k, pk) in enumerate(kinds)
+            for i, (k, pk, _) in enumerate(kinds)
         ],
         b,
     )
     nodes, edges = (
-        spark.read.parquet(cfg.table_path(k)).drop("pk_bucket")
-        for k, _ in kinds
+        _read(spark, cfg.table_path(k), schema, "pk_bucket")
+        for k, _, schema in kinds
     )
     return {
         "triples": triples,

@@ -211,6 +211,27 @@ def test_long_surface_resolves_through_entity_map(spark):
     assert nodes.filter(F.col("id") == "CANON").count() == 1
 
 
+def test_each_output_is_one_scan_of_triples(spark, tmp_path):
+    """Each output's executed plan scans triples once; nodes group every
+    node kind in one aggregation, and edges aggregate nothing."""
+    cfg = PipelineConfig()
+    run_extract(source_files_df(spark, 20)).write.parquet(str(tmp_path / "t"))
+    triples = spark.read.parquet(str(tmp_path / "t"))
+    mentions = mentions_from_triples(triples, cfg).localCheckpoint()
+    run_canonicalize(mentions, match_pairs(mentions, cfg)).write.parquet(
+        str(tmp_path / "em")
+    )
+    emap = spark.read.parquet(str(tmp_path / "em"))
+    nodes, edges = run_materialize(triples, emap, cfg)
+    for df, aggregations in ((nodes, 1), (edges, 0)):
+        df.collect()
+        qe = df._jdf.queryExecution()
+        final = qe.executedPlan().toString().split("== Initial Plan ==")[0]
+        # triples is the one scan reading subj (entity_map reads ids)
+        assert final.count("FileScan parquet [subj#") == 1
+        assert qe.optimizedPlan().toString().count("Aggregate [") == aggregations
+
+
 def test_linked_variants_share_canonical_node(graph):
     """'requests' / 'Requests' / 'requests.py' must resolve to ONE module
     node whose surfaces property lists the variants."""

@@ -15,6 +15,7 @@ from kg.conf import PipelineConfig
 from kg.datagen import source_files_df
 from kg.lineage import LineageStore, bucket_col
 from kg.pipeline import run_pipeline
+from kg.session import CODEGEN_CACHE_ENTRIES
 
 N = 60
 
@@ -573,12 +574,58 @@ def test_over_budget_vocabulary_takes_the_spark_path(
 
 
 def test_restart_truncates_everything(spark, tmp_path_factory):
+    """A second restart build truncates and redoes every stage (O15), and
+    compiles no generated code: the session's codegen cache
+    (``kg.session.CODEGEN_CACHE_ENTRIES``) holds the first build's
+    classes, and each ``stage_done`` event reports the stage's compiles."""
     cfg = _cfg(tmp_path_factory, "restart")
     src = source_files_df(spark, 20)
     run_pipeline(spark, src, cfg, restart=True)
-    out = run_pipeline(spark, src, cfg, restart=True)  # O15: truncate + redo
+    with _kg_events() as events:
+        out = run_pipeline(spark, src, cfg, restart=True)
     n = out["nodes"].count()
     assert n == out["nodes"].select("id").distinct().count() > 0
+    compiles = {
+        e["stage"]: e["codegen_compiles"]
+        for e in events if e["event"] == "stage_done"
+    }
+    assert compiles == dict.fromkeys(
+        ("extract", "link", "canonicalize", "materialize"), 0
+    )
+    # one small build fits Spark's default cache too; the benchmark ops
+    # need the session's larger one
+    assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
+        CODEGEN_CACHE_ENTRIES
+    )
+
+
+def test_tables_read_back_with_their_inferred_schema(
+    spark, tmp_path_factory, plain_build
+):
+    """The pipeline reads its tables back with their declared schemas,
+    which run no inference job; each equals what parquet inference
+    reads, bucket column dropped."""
+    from kg.pipeline import _run_clean
+
+    cfg = _copy(plain_build[0], tmp_path_factory, "declared_schemas")
+    out = run_pipeline(spark, source_files_df(spark, N), cfg)  # all skipped
+    clean = _run_clean(
+        spark, source_files_df(spark, 20), cfg,
+        LineageStore(spark, cfg.table_path("lineage")), "exact", 0.7,
+    )
+    tables = {**out, "clean": clean}
+    buckets = {
+        "clean": "cbucket", "triples": "bucket",
+        "nodes": "pk_bucket", "edges": "pk_bucket",
+    }
+    for name in (
+        "clean", "triples", "mentions", "matches", "entity_map",
+        "nodes", "edges",
+    ):
+        inferred = spark.read.parquet(cfg.table_path(name))
+        if name in buckets:
+            inferred = inferred.drop(buckets[name])
+        assert tables[name].schema == inferred.schema, name
 
 
 def test_lineage_metrics_recorded(spark, tmp_path_factory):
