@@ -114,10 +114,10 @@ def _fingerprint(*cols: str) -> Column:
     )
 
 
-def _footer_stats(path: str, col: str, rows: list[dict]) -> list[dict]:
+def _footer_stats(path: str, col: str, rows: list[dict]) -> int:
     """Lineage rows for just-written buckets: each of ``rows`` (bucket,
     rows_in[, input_fp]) gains ``rows_out``, read from the parquet
-    FOOTERS of its bucket dir.
+    FOOTERS of its bucket dir.  Returns the number of files read.
 
     O(buckets) metadata reads and no Spark job: ``_write`` lands each
     bucket in one task, so a bucket dir holds one file whatever the data
@@ -127,13 +127,13 @@ def _footer_stats(path: str, col: str, rows: list[dict]) -> list[dict]:
     fingerprint: the output is a deterministic recomputation of the
     input, and invalidation rides on the input fingerprint alone.  Local
     paths only (``PipelineConfig`` rejects ``scheme://`` warehouses)."""
+    files = 0
     for r in rows:
         bucket_dir = os.path.join(path, f"{col}={r['bucket']}")
-        r["rows_out"] = sum(
-            pq.ParquetFile(f).metadata.num_rows
-            for f in glob.glob(os.path.join(bucket_dir, "*.parquet"))
-        )
-    return rows
+        parts = glob.glob(os.path.join(bucket_dir, "*.parquet"))
+        r["rows_out"] = sum(pq.ParquetFile(f).metadata.num_rows for f in parts)
+        files += len(parts)
+    return files
 
 
 def _read(
@@ -154,7 +154,10 @@ def _only(df: DataFrame, col: str, buckets: set[int], n: int) -> DataFrame:
     ``n``)."""
     if len(buckets) == n:
         return df
-    return df.filter(F.col(col).isin(sorted(buckets)))
+    # an array literal, which generated code reads by reference: an
+    # isin (In, or InSet above 10 values) is compiled with its values
+    # inlined, so each distinct pending set compiled new classes
+    return df.filter(F.array_contains(F.lit(sorted(buckets)), F.col(col)))
 
 
 def _write(
@@ -232,7 +235,8 @@ def _bucketed_stage(
     write on the calling thread and the rest on a pool.  Then lineage
     downstream of the last output is dropped and EVERY pending bucket of
     every output is recorded done, ``rows_out`` from the parquet
-    footers.
+    footers; ``stage_done`` carries the number of those files
+    (``files_written``).
 
     ``src`` is the bucketed source of a one-output stage, bucketed on the
     output's column.  It adds a stats job, run on the pool beside the
@@ -297,12 +301,14 @@ def _bucketed_stage(
         "rows_in": -1 if src is None else 0,
         "input_fp": _EMPTY_FP if detect_changes else None,
     }
+    files = 0
     for (stage, path, c, _), p in zip(outputs, pending):
         if p:
             rows = [counted.get(b, {"bucket": b, **blank}) for b in sorted(p)]
-            lineage.record_buckets(stage, _footer_stats(path, c, rows), t.ms)
+            files += _footer_stats(path, c, rows)
+            lineage.record_buckets(stage, rows, t.ms)
     log_event("stage_done", stage=event, duration_ms=t.ms,
-              codegen_compiles=t.compiles)
+              codegen_compiles=t.compiles, files_written=files)
 
 
 def _atomic_stage(

@@ -7,9 +7,17 @@ ships unchanged via ``spark-submit --py-files``.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
 from pyspark.sql import SparkSession
+
+from kg.log import log_event
 
 
 # a container's memory limit (cgroup v2, then v1), which the physical
@@ -47,6 +55,78 @@ def host_memory_bytes(limit_files: tuple[str, ...] = _CGROUP_LIMITS) -> int:
 # conf: it sizes the cache the first time the JVM generates code, so
 # extra_conf overrides it only for the JVM's first session.
 CODEGEN_CACHE_ENTRIES = 1000
+
+
+# Hadoop's local filesystem sets the mode of every file and directory it
+# creates (each parquet part, its .crc, each bucket and staging dir).
+# Without the native hadoop library, which pyspark does not ship, each
+# setPermission forks a chmod process: three warm full_build benchmark ops
+# (seed 7, 4-core host) started 1,304-1,374 processes each, whose
+# 1.49-1.53 CPU s per op the JVM paid as reaped children, on top of the
+# forks themselves.  jvm/InProcessLocalFileSystem.java is the same
+# checksummed filesystem with the mode set in-process: 47-126 processes,
+# 0.00 child CPU s and 3.2-4.9 s less JVM CPU per op, the same files,
+# checksums and modes.  It is compiled once per source and Hadoop version
+# with the JDK's javac (~1.5 s) into jvm/__pycache__, which git and
+# scripts/make_dist.py skip; a host without javac keeps Hadoop's default
+# filesystem and writes the same outputs.
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_LOCAL_FS = "kg.jvm.InProcessLocalFileSystem"
+
+
+def _javac() -> str | None:
+    home = os.environ.get("JAVA_HOME")
+    javac = home and os.path.join(home, "bin", "javac")
+    if javac and os.access(javac, os.X_OK):
+        return javac
+    return shutil.which("javac")
+
+
+def local_fs_conf() -> dict[str, str]:
+    """Spark conf that installs ``_LOCAL_FS`` as the ``file://``
+    filesystem of a JVM about to be launched: its jar (built on first use)
+    on the driver classpath, and ``fs.file.impl``.  Empty, after one
+    ``local_fs_fallback`` event, when the jar cannot be built."""
+    from pyspark.find_spark_home import _find_spark_home
+
+    name = _LOCAL_FS.rsplit(".", 1)[1]
+    src = os.path.join(_JVM_DIR, name + ".java")
+    cache = os.path.join(_JVM_DIR, "__pycache__")
+    hadoop = glob.glob(
+        os.path.join(_find_spark_home(), "jars", "hadoop-client-api-*.jar")
+    )
+    try:
+        # keyed on the source and the Hadoop version compiled against
+        with open(src, "rb") as f:
+            key = hashlib.sha256(f.read())
+        key.update("".join(map(os.path.basename, hadoop)).encode())
+        jar = os.path.join(cache, f"{name}-{key.hexdigest()[:16]}.jar")
+        if not os.path.exists(jar):
+            javac = _javac()
+            if javac is None or not hadoop:
+                raise FileNotFoundError("no javac or no hadoop-client-api jar")
+            os.makedirs(cache, exist_ok=True)
+            # built under a temp name and renamed into place: a session
+            # starting concurrently never reads a half-written jar
+            with tempfile.TemporaryDirectory(dir=cache) as tmp:
+                subprocess.run(
+                    [javac, "--release", "17", "-nowarn", "-cp", hadoop[0],
+                     "-d", tmp, src],
+                    check=True, capture_output=True, text=True, timeout=300,
+                )
+                with zipfile.ZipFile(os.path.join(tmp, "jar"), "w") as z:
+                    for c in glob.glob(os.path.join(tmp, "**", "*.class"),
+                                       recursive=True):
+                        z.write(c, os.path.relpath(c, tmp))
+                os.replace(os.path.join(tmp, "jar"), jar)
+    except (OSError, subprocess.SubprocessError) as e:
+        log_event("local_fs_fallback",
+                  reason=(getattr(e, "stderr", None) or str(e))[-500:])
+        return {}
+    return {
+        "spark.driver.extraClassPath": jar,
+        "spark.hadoop.fs.file.impl": _LOCAL_FS,
+    }
 
 
 def default_driver_memory(mem_bytes: int) -> str:
@@ -142,13 +222,23 @@ def get_spark(
     # NB: checking SPARK_SUBMIT_OPTS is WRONG — this container exports it
     # globally for ivy config, which silently turned every local[N]
     # request into local[*].
-    from pyspark import SparkConf
+    from pyspark import SparkConf, SparkContext
 
+    conf = dict(extra_conf or {})
     if not SparkConf().contains("spark.master") and not os.environ.get("SPARK_MASTER"):
         builder = builder.master(master)
-    if extra_conf:
-        for k, v in extra_conf.items():
-            builder = builder.config(k, v)
+        # a local JVM this call launches (not one running already, nor
+        # one whose gateway a launcher passed in) gets the in-process
+        # local filesystem; extra_conf still wins, and its classpath is
+        # kept after the jar
+        if SparkContext._gateway is None and not os.environ.get("PYSPARK_GATEWAY_PORT"):
+            fs = local_fs_conf()
+            if fs:
+                cp = "spark.driver.extraClassPath"
+                fs[cp] = os.pathsep.join(filter(None, (fs[cp], conf.pop(cp, None))))
+                conf = {**fs, **conf}
+    for k, v in conf.items():
+        builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     # plan-shape guard for every HOF-array explode in the library

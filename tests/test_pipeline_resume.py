@@ -4,8 +4,10 @@ processes only missing work, outputs byte-identical to a clean run."""
 from __future__ import annotations
 
 import contextlib
+import glob
 import json
 import logging
+import os
 import shutil
 
 import pytest
@@ -469,6 +471,45 @@ def test_file_added_to_empty_bucket_is_extracted(spark, tmp_path_factory):
     assert ext.filter("input_fp IS NULL").count() == 0
 
 
+def test_new_pending_bucket_set_compiles_no_code(spark, tmp_path_factory):
+    """The pending-bucket filter's generated code does not depend on the
+    set: once a detect_changes run has pended one bucket, a run pending
+    another compiles no class in extract (a filter that inlines the
+    bucket values compiled new ones for every distinct set)."""
+    from kg.datagen import make_file
+    from kg.schemas import SOURCE_FILES
+
+    cfg = _cfg(tmp_path_factory, "pending_sets")
+    files = [make_file(i) for i in range(20)]
+    # local DataFrames: no edited literal enters a plan
+    src = spark.createDataFrame(files, SOURCE_FILES)
+    run_pipeline(spark, src, cfg, restart=True, detect_changes=True)
+    bucket = bucket_col("repo", "path", n_buckets=cfg.lineage_buckets)
+    python = {
+        r.b: (r.repo, r.path)
+        for r in src.filter(F.col("lang") == "python")
+        .select("repo", "path", bucket.alias("b")).collect()
+    }
+    first, second = (python[b] for b in sorted(python)[:2])
+
+    def edited(*keys):
+        return spark.createDataFrame([
+            {**f, "content": f["content"] + "\nimport sentinelxyz\n"}
+            if (f["repo"], f["path"]) in keys else f
+            for f in files
+        ], SOURCE_FILES)
+
+    run_pipeline(spark, edited(first), cfg, detect_changes=True)
+    with _kg_events() as events:
+        run_pipeline(spark, edited(first, second), cfg, detect_changes=True)
+    extract = [e for e in events if e.get("stage") == "extract"]
+    assert [e["event"] for e in extract] == [
+        "changed_buckets_invalidated", "stage_start", "stage_done"
+    ]
+    assert extract[1]["pending_buckets"] == {"extract": 1}
+    assert extract[2]["codegen_compiles"] == 0
+
+
 def test_materialize_resume_rewrites_only_missing_buckets(
     spark, tmp_path_factory, plain_build
 ):
@@ -592,6 +633,21 @@ def test_restart_truncates_everything(spark, tmp_path_factory):
     assert compiles == dict.fromkeys(
         ("extract", "link", "canonicalize", "materialize"), 0
     )
+    # a bucketed stage reports the parquet files its buckets hold
+    files = {
+        e["stage"]: e["files_written"]
+        for e in events if e["event"] == "stage_done" and "files_written" in e
+    }
+    assert files == {
+        stage: sum(
+            len(glob.glob(os.path.join(cfg.table_path(t), "*", "*.parquet")))
+            for t in tables
+        )
+        for stage, tables in (
+            ("extract", ["triples"]), ("materialize", ["nodes", "edges"])
+        )
+    }
+    assert files["materialize"] > 0
     # one small build fits Spark's default cache too; the benchmark ops
     # need the session's larger one
     assert spark.conf.get("spark.sql.codegen.cache.maxEntries") == str(
