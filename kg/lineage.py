@@ -65,6 +65,60 @@ def bucket_col(*key_cols: str, n_buckets: int):
     return F.pmod(F.xxhash64(*key_cols), F.lit(n_buckets)).cast("int")
 
 
+_M64 = (1 << 64) - 1
+_P1, _P2, _P3, _P4, _P5 = (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5,
+)
+
+
+def _rotl(x: int, r: int) -> int:
+    return ((x << r) | (x >> (64 - r))) & _M64
+
+
+def _lane(acc: int, lane: int) -> int:
+    return _rotl((acc + lane * _P2) & _M64, 31) * _P1 & _M64
+
+
+def _xxh64(data: bytes, seed: int = 42) -> int:
+    """XXH64 of ``data`` as an unsigned int: Spark's ``XXH64.hashUnsafeBytes``
+    (``F.xxhash64``'s seed is 42), lanes read little-endian."""
+    n, i = len(data), 0
+    if n >= 32:
+        v = [(seed + _P1 + _P2) & _M64, (seed + _P2) & _M64, seed,
+             (seed - _P1) & _M64]
+        while i + 32 <= n:
+            v = [_lane(v[j], int.from_bytes(data[i + 8 * j:i + 8 * j + 8],
+                                            "little")) for j in range(4)]
+            i += 32
+        h = (_rotl(v[0], 1) + _rotl(v[1], 7) + _rotl(v[2], 12)
+             + _rotl(v[3], 18)) & _M64
+        for x in v:
+            h = ((h ^ _lane(0, x)) * _P1 + _P4) & _M64
+    else:
+        h = (seed + _P5) & _M64
+    h = (h + n) & _M64
+    while i + 8 <= n:
+        k = _lane(0, int.from_bytes(data[i:i + 8], "little"))
+        h = (_rotl(h ^ k, 27) * _P1 + _P4) & _M64
+        i += 8
+    if i + 4 <= n:
+        k = int.from_bytes(data[i:i + 4], "little") * _P1 & _M64
+        h = (_rotl(h ^ k, 23) * _P2 + _P3) & _M64
+        i += 4
+    for b in data[i:]:
+        h = _rotl(h ^ (b * _P5 & _M64), 11) * _P1 & _M64
+    h = (h ^ (h >> 33)) * _P2 & _M64
+    h = (h ^ (h >> 29)) * _P3 & _M64
+    return h ^ (h >> 32)
+
+
+def bucket_of(key: str, n_buckets: int) -> int:
+    """``bucket_col`` of one string key, computed in Python."""
+    h = _xxh64(key.encode())
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
+
+
 class LineageStore:
     def __init__(self, spark: SparkSession, path: str):
         self.spark = spark

@@ -5,4 +5,5 @@ from kg.materialize.documents import (  # noqa: F401
     json_array,
     rename_reserved_keys,
 )
-from kg.materialize.stage import run_materialize  # noqa: F401
+from kg.materialize.driver import driver_materialize  # noqa: F401
+from kg.materialize.stage import materialize_tables, run_materialize  # noqa: F401

@@ -15,7 +15,13 @@ in one of two shapes:
     A bucket is pending unless it is recorded done AND its table exists,
     so a lost table is rebuilt, and every pending bucket is recorded,
     so a bucket with no source rows or no output still completes;
-    output row counts come from parquet footers.
+    output row counts come from parquet footers.  An output's rows are
+    a Spark DataFrame, written by one partitioned Spark write, or an
+    Arrow table, written one parquet file per bucket by the driver:
+    materialize chooses, in its own module, between a driver path for
+    a ``triples`` table within the driver budget and its Spark plan
+    above it (``kg.materialize.materialize_tables``), with the same rows
+    in the same ``pk_bucket`` layout either way.
   * atomic (``_atomic_stage``: clean_minhash, link, canonicalize) —
     inputs are vocabulary- or output-sized, or (near-dup pairs) cross
     buckets by construction.  The stage is skipped only when it is
@@ -60,9 +66,12 @@ import functools
 import glob
 import os
 import shutil
+import uuid
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 
+import pyarrow as pa
+import pyarrow.compute as pc
 import pyarrow.parquet as pq
 from pyspark.sql import (
     Column,
@@ -79,7 +88,7 @@ from kg.extract import run_extract
 from kg.lineage import LineageStore, StageTimer, bucket_col
 from kg.link import add_shingles, match_pairs, mentions_from_triples
 from kg.log import log_event
-from kg.materialize import run_materialize
+from kg.materialize import materialize_tables
 from kg.schemas import EDGES, ENTITY_MAP, MENTIONS, NODES, SCORED_PAIRS, TRIPLES
 
 STAGES = ("clean", "extract", "link", "canonicalize", "materialize")
@@ -192,24 +201,58 @@ def _write(
     w.parquet(path)
 
 
+def _write_arrow(table: pa.Table, path: str, col: str, buckets: set[int]):
+    """``_write`` of an Arrow table into the ``buckets`` partitions of
+    ``path``: one Spark-named zstd file per bucket with rows, written
+    under a hidden temp name and renamed into place, so a reader (or a
+    crash) never sees half a file.  Without dictionary encoding or
+    min/max statistics: a file is one row group of one bucket, pruned by
+    its directory, and the statistics (64-character hash ids among them,
+    repeated in each page header and the footer) were ~15% of the bytes
+    and prune nothing the engine filters on.  Seed-7 materialize tables
+    of the benchmark's two corpora (nodes, edges; KB): Spark's writer
+    392, 991 and 365, 1003; pyarrow with dictionaries and statistics
+    384, 1014 and 356, 1032; without either 319, 831 and 293, 877."""
+    os.makedirs(path, exist_ok=True)
+    keys = table[col]
+    table = table.drop_columns([col])
+    for b in sorted(buckets):
+        part = table.filter(pc.equal(keys, b))
+        if not part.num_rows:
+            continue
+        name = f"part-00000-{uuid.uuid4()}-c000.zstd.parquet"
+        tmp = os.path.join(path, f"{col}={b}", f".{name}.tmp")
+        os.makedirs(os.path.dirname(tmp), exist_ok=True)
+        pq.write_table(
+            part, tmp, compression="zstd", compression_level=3,
+            use_dictionary=False, write_statistics=False,
+            store_schema=False,
+        )
+        os.replace(tmp, os.path.join(os.path.dirname(tmp), name))
+
+
 def _write_buckets(
-    df: DataFrame, path: str, col: str, buckets: set[int], n: int
+    df: DataFrame | pa.Table, path: str, col: str, buckets: set[int], n: int
 ) -> None:
     """Overwrite the ``buckets`` partitions of ``path`` with ``df``'s rows
-    in them.  Their dirs are cleared first: dynamic partition overwrite
-    replaces only partitions PRESENT in the new output, so a bucket whose
-    recomputation is now empty would keep its stale files (and lineage
-    would count them as current).  A crash between clear and write
-    leaves the bucket absent and unrecorded, so the next run rewrites
-    it."""
+    in them: a Spark DataFrame through ``_write``, an Arrow table (a
+    driver-computed output) through ``_write_arrow``.  Their dirs are
+    cleared first: dynamic partition overwrite replaces only partitions
+    PRESENT in the new output, so a bucket whose recomputation is now
+    empty would keep its stale files (and lineage would count them as
+    current).  A crash between clear and write leaves the bucket absent
+    and unrecorded, so the next run rewrites it."""
     for b in buckets:
         shutil.rmtree(os.path.join(path, f"{col}={b}"), ignore_errors=True)
-    _write(_only(df, col, buckets, n), path, [col], buckets=n)
+    if isinstance(df, pa.Table):
+        _write_arrow(df, path, col, buckets)
+    else:
+        _write(_only(df, col, buckets, n), path, [col], buckets=n)
 
 
 # one table a bucketed stage writes: (lineage stage, path, bucket column,
 # frame), where ``frame(pending)`` returns its rows for the pending buckets
-_Output = tuple[str, str, str, Callable[[set[int]], DataFrame]]
+_Output = tuple[str, str, str, Callable[[set[int]], DataFrame | pa.Table]]
 
 # ``_fingerprint`` over no rows: recorded for a pending bucket without
 # source rows, so a file added to it later reads as a change
@@ -511,24 +554,25 @@ def run_pipeline(
     # of the partition key (the reference's pk-partitioned container,
     # CosmosDb.cs:125-132): the transform is recomputed (deterministic),
     # but only pending buckets are WRITTEN, the corpus-sized cost.  It is
-    # planned once, and only when a bucket is pending (planning alone took
-    # 0.55-1.0 s for the 707-file benchmark corpus on a 4-core host)
-    docs = functools.cache(lambda: run_materialize(triples, entity_map, cfg))
-    kinds = (("nodes", "partition_key", NODES), ("edges", "out_pk", EDGES))
+    # computed (driver regime) or planned (Spark regime; planning alone
+    # took 0.55-1.0 s for the 707-file benchmark corpus on a 4-core host)
+    # once, and only when a bucket is pending
+    docs = functools.cache(
+        lambda: materialize_tables(triples, entity_map, cfg)
+    )
+    kinds = (("nodes", NODES), ("edges", EDGES))
     _bucketed_stage(
         lineage, "materialize",
         [
             (f"materialize_{k}", cfg.table_path(k), "pk_bucket",
-             lambda _, i=i, pk=pk: docs()[i].withColumn(
-                 "pk_bucket", bucket_col(pk, n_buckets=b)
-             ))
-            for i, (k, pk, _) in enumerate(kinds)
+             lambda _, i=i: docs()[i])
+            for i, (k, _) in enumerate(kinds)
         ],
         b,
     )
     nodes, edges = (
         _read(spark, cfg.table_path(k), schema, "pk_bucket")
-        for k, _, schema in kinds
+        for k, schema in kinds
     )
     return {
         "triples": triples,

@@ -68,10 +68,13 @@ CODEGEN_CACHE_ENTRIES = 1000
 # 0.00 child CPU s and 3.2-4.9 s less JVM CPU per op, the same files,
 # checksums and modes.  It is compiled once per source and Hadoop version
 # with the JDK's javac (~1.5 s) into jvm/__pycache__, which git and
-# scripts/make_dist.py skip; a host without javac keeps Hadoop's default
-# filesystem and writes the same outputs.
+# scripts/make_dist.py skip.  A host without javac gets Hadoop's own
+# checksummed LocalFileSystem, pinned: left to the service loader,
+# file:// resolves to Hive's test filesystem (ProxyLocalFileSystem, listed
+# by hive-exec's META-INF/services ahead of hadoop-client-api's entry).
 _JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 _LOCAL_FS = "kg.jvm.InProcessLocalFileSystem"
+_HADOOP_LOCAL_FS = "org.apache.hadoop.fs.LocalFileSystem"
 
 
 def _javac() -> str | None:
@@ -85,8 +88,9 @@ def _javac() -> str | None:
 def local_fs_conf() -> dict[str, str]:
     """Spark conf that installs ``_LOCAL_FS`` as the ``file://``
     filesystem of a JVM about to be launched: its jar (built on first use)
-    on the driver classpath, and ``fs.file.impl``.  Empty, after one
-    ``local_fs_fallback`` event, when the jar cannot be built."""
+    on the driver classpath, and ``fs.file.impl``.  When the jar cannot
+    be built, one ``local_fs_fallback`` event and ``fs.file.impl`` alone,
+    set to Hadoop's ``LocalFileSystem``."""
     from pyspark.find_spark_home import _find_spark_home
 
     name = _LOCAL_FS.rsplit(".", 1)[1]
@@ -122,7 +126,7 @@ def local_fs_conf() -> dict[str, str]:
     except (OSError, subprocess.SubprocessError) as e:
         log_event("local_fs_fallback",
                   reason=(getattr(e, "stderr", None) or str(e))[-500:])
-        return {}
+        return {"spark.hadoop.fs.file.impl": _HADOOP_LOCAL_FS}
     return {
         "spark.driver.extraClassPath": jar,
         "spark.hadoop.fs.file.impl": _LOCAL_FS,
@@ -233,10 +237,10 @@ def get_spark(
         # kept after the jar
         if SparkContext._gateway is None and not os.environ.get("PYSPARK_GATEWAY_PORT"):
             fs = local_fs_conf()
-            if fs:
-                cp = "spark.driver.extraClassPath"
+            cp = "spark.driver.extraClassPath"
+            if fs.get(cp):
                 fs[cp] = os.pathsep.join(filter(None, (fs[cp], conf.pop(cp, None))))
-                conf = {**fs, **conf}
+            conf = {**fs, **conf}
     for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

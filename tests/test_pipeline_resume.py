@@ -72,16 +72,35 @@ def _link_paths(events: list[dict]) -> list[tuple]:
     ]
 
 
+def _materialize_paths(events: list[dict]) -> list[tuple]:
+    """(path, triples) of each ``materialize_path`` event."""
+    return [(e["path"], e["triples"]) for e in events
+            if e["event"] == "materialize_path"]
+
+
+def _bucketed_rows(cfg: PipelineConfig, table: str) -> list[tuple]:
+    """Sorted rows of a materialize table with their ``pk_bucket``."""
+    import pyarrow.dataset as ds
+
+    rows = ds.dataset(
+        cfg.table_path(table), format="parquet", partitioning="hive"
+    ).to_table().to_pylist()
+    return sorted(
+        tuple((k, tuple(v) if isinstance(v, list) else v) for k, v in r.items())
+        for r in rows
+    )
+
+
 @pytest.fixture(scope="module")
 def plain_build(spark, tmp_path_factory):
     """Restart build of the N-file corpus in default mode (no input
     fingerprints recorded), made once per module: (warehouse, snapshot,
-    the paths its link logged).  Tests work on a ``_copy`` of the
+    the ``kg`` events it logged).  Tests work on a ``_copy`` of the
     warehouse."""
     cfg = _cfg(tmp_path_factory, "plain_build")
     with _kg_events() as events:
         out = run_pipeline(spark, source_files_df(spark, N), cfg, restart=True)
-    return cfg.warehouse, _snapshot(out), _link_paths(events)
+    return cfg.warehouse, _snapshot(out), events
 
 
 def _seeded_store(spark, tmp_path_factory) -> LineageStore:
@@ -510,18 +529,25 @@ def test_new_pending_bucket_set_compiles_no_code(spark, tmp_path_factory):
     assert extract[2]["codegen_compiles"] == 0
 
 
+@pytest.mark.parametrize("path", ["driver", "spark"])
 def test_materialize_resume_rewrites_only_missing_buckets(
-    spark, tmp_path_factory, plain_build
+    spark, tmp_path_factory, monkeypatch, plain_build, path
 ):
     """Kill-mid-materialize (VERDICT r2 #6): with extract fully done, a
     rerun must rewrite ONLY the node buckets whose lineage is missing —
     completed buckets' files stay untouched on disk — and converge to the
-    clean-run state."""
+    clean-run state, on either materialize path (``spark``: the budget
+    forced to 0)."""
     import os
+
+    from kg import hints
 
     src = source_files_df(spark, N)
     warehouse, golden, _ = plain_build
-    cfg = _copy(warehouse, tmp_path_factory, "mat_resume")
+    cfg = _copy(warehouse, tmp_path_factory, f"mat_resume_{path}")
+    want = _bucketed_rows(cfg, "nodes")
+    if path == "spark":
+        monkeypatch.setattr(hints, "DEFAULT_MAX_BYTES", 0)
 
     store = LineageStore(spark, cfg.table_path("lineage"))
     done = sorted(store.completed_buckets("materialize_nodes"))
@@ -538,8 +564,11 @@ def test_materialize_resume_rewrites_only_missing_buckets(
         f: os.path.getmtime(f"{survivor}/{f}") for f in os.listdir(survivor)
     }
 
-    out = run_pipeline(spark, src, cfg)
+    with _kg_events() as events:
+        out = run_pipeline(spark, src, cfg)
+    assert [p for p, _ in _materialize_paths(events)] == [path]
     assert _snapshot(out) == golden
+    assert _bucketed_rows(cfg, "nodes") == want
     # completed buckets were NOT rewritten (same files, same mtimes)
     mtimes_after = {
         f: os.path.getmtime(f"{survivor}/{f}") for f in os.listdir(survivor)
@@ -594,24 +623,30 @@ def test_missing_output_rebuilds_recorded_stage(
 def test_over_budget_vocabulary_takes_the_spark_path(
     spark, tmp_path_factory, plain_build, monkeypatch
 ):
-    """``plain_build``, whose vocabulary is far under the driver budget,
-    ran link on the driver.  With the budget forced to 0 link takes the
-    Spark path, and every table equals the driver-path build's."""
+    """``plain_build``, whose vocabulary and triples are far under the
+    driver budget, ran link and materialize on the driver.  With the
+    budget forced to 0 both take the Spark path, and every table equals
+    the driver-path build's, nodes and edges with their ``pk_bucket``."""
     from kg import hints
 
-    warehouse, golden, driver_paths = plain_build
+    warehouse, golden, first_events = plain_build
     first = PipelineConfig(warehouse=warehouse)
     monkeypatch.setattr(hints, "DEFAULT_MAX_BYTES", 0)
     cfg = _cfg(tmp_path_factory, "spark_path")
     with _kg_events() as events:
         out = run_pipeline(spark, source_files_df(spark, N), cfg, restart=True)
     n = out["mentions"].count()
-    assert driver_paths == [("driver", n)]
+    triples = out["triples"].count()
+    assert _link_paths(first_events) == [("driver", n)]
     assert _link_paths(events) == [("spark", None)]
+    assert _materialize_paths(first_events) == [("driver", triples)]
+    assert _materialize_paths(events) == [("spark", triples)]
     for t in ("mentions", "matches", "entity_map"):
         want = spark.read.parquet(first.table_path(t)).collect()
         assert sorted(map(tuple, out[t].collect())) == sorted(map(tuple, want))
     assert _snapshot(out) == golden
+    for t in ("nodes", "edges"):
+        assert _bucketed_rows(cfg, t) == _bucketed_rows(first, t)
 
 
 def test_restart_truncates_everything(spark, tmp_path_factory):

@@ -112,16 +112,22 @@ def test_bucketed_write_keeps_hadoop_modes_without_forking(spark, tmp_path):
     }
 
 
-def test_local_fs_conf_is_empty_without_javac(tmp_path, monkeypatch, caplog):
-    """No JDK compiler and no built jar: no conf entries (Hadoop's default
-    filesystem stays) and one ``local_fs_fallback`` event."""
+def test_local_fs_conf_pins_hadoop_local_fs_without_javac(
+    tmp_path, monkeypatch, caplog
+):
+    """No JDK compiler and no built jar: Hadoop's ``LocalFileSystem``
+    pinned as ``fs.file.impl`` (not left to the service loader, which
+    picks Hive's test filesystem), no jar on the classpath, and one
+    ``local_fs_fallback`` event."""
     caplog.set_level(logging.INFO, logger="kg")
     src = os.path.join(kg.session._JVM_DIR, "InProcessLocalFileSystem.java")
     shutil.copy(src, tmp_path)
     monkeypatch.setattr(kg.session, "_JVM_DIR", str(tmp_path))
     monkeypatch.delenv("JAVA_HOME", raising=False)
     monkeypatch.setenv("PATH", "")
-    assert local_fs_conf() == {}
+    assert local_fs_conf() == {
+        "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.LocalFileSystem"
+    }
     events = [json.loads(r.getMessage())["event"] for r in caplog.records
               if r.name == "kg"]
     assert events == ["local_fs_fallback"]
@@ -129,13 +135,15 @@ def test_local_fs_conf_is_empty_without_javac(tmp_path, monkeypatch, caplog):
 
 
 @needs_javac
-def test_local_fs_conf_is_empty_when_the_compile_fails(
+def test_local_fs_conf_pins_hadoop_local_fs_when_the_compile_fails(
     tmp_path, monkeypatch, caplog
 ):
     caplog.set_level(logging.INFO, logger="kg")
     (tmp_path / "InProcessLocalFileSystem.java").write_text("class {")
     monkeypatch.setattr(kg.session, "_JVM_DIR", str(tmp_path))
-    assert local_fs_conf() == {}
+    assert local_fs_conf() == {
+        "spark.hadoop.fs.file.impl": "org.apache.hadoop.fs.LocalFileSystem"
+    }
     events = [json.loads(r.getMessage()) for r in caplog.records
               if r.name == "kg"]
     assert [e["event"] for e in events] == ["local_fs_fallback"]
